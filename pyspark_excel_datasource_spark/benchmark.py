@@ -11,8 +11,9 @@ short stdout tail, and round 10's per-pass ``samples`` payload pushed
 the line past it, recording ``parsed: null``):
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <dir>}
-Per-pass detail (every sample, loadavg per pass) goes to
-``BENCH_DETAIL.json`` next to this package's repo root and to stderr.
+Per-pass detail (every sample, loadavg per pass, and per query the
+codegen compiles over its timed runs) goes to ``BENCH_DETAIL.json`` next
+to this package's repo root and to stderr.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import sys
 import time
 
 from .plans.registry import load_all_queries
-from .session import get_session
+from .session import codegen_compiles, get_session
 
 #: q_dedup_minhash (not q_dedup_near) is the timed dedup path: the exact
 #: inverted-index join costs Σ_shingle df² and the module itself documents
@@ -174,17 +175,21 @@ def main() -> None:
     for _ in range(PASSES):
         load_before = os.getloadavg()[0]
         timings: dict[str, float] = {}
+        compiles: dict[str, int] = {}
         for name in HEADLINE:
             materialize(queries[name](spark, sf_dir))  # per-query warmup
             samples = []
+            c0 = codegen_compiles(spark)
             for _ in range(RUNS):
                 t0 = time.perf_counter()
                 materialize(queries[name](spark, sf_dir))
                 samples.append(time.perf_counter() - t0)
+            compiles[name] = codegen_compiles(spark) - c0
             timings[name] = round(statistics.median(samples), 3)
         passes.append(
             {
                 "queries": timings,
+                "codegen_compiles": compiles,
                 "loadavg_before": round(load_before, 2),
                 "loadavg_after": round(os.getloadavg()[0], 2),
             }

@@ -41,6 +41,12 @@ ORACLE_SF_DIR = "/root/testdata/sf0.01"
 #: read-only, so the schema cannot drift under the memo.
 _SCHEMA_CACHE: dict = {}
 
+#: (path, size, mtime_ns) -> parquet footer row-group count, read by
+#: :func:`_estimate_scan_parts` on every ``spread()``. Same immutable-input
+#: contract as :data:`_SCHEMA_CACHE`; the size and mtime in the key (the
+#: estimate stats every file anyway) make a rewritten file a miss.
+_ROW_GROUP_CACHE: dict = {}
+
 #: (applicationId, path) -> the resolved base DataFrame for the immutable
 #: test tables (r15, guide §7.3 driver work). One step up from the schema
 #: memo and the same metadata-only contract: a DataFrame is an immutable
@@ -155,11 +161,16 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     pandas+Arrow plans a true single-partition LocalRelation-style scan
     with zero python tasks (~0.03s), with the DDL schema applied
     exactly as before. Use for every bounded driver-built frame
-    (descriptor lists, file maps, stream partials, literal LUTs)."""
+    (descriptor lists, file maps, stream partials, literal LUTs).
+
+    The pandas frame is object-dtype so that every value reaches Arrow as
+    the Python object it is and a ``None`` as NULL: with inferred dtypes,
+    pandas makes an integer column holding a ``None`` float64, which
+    rounds its other values above 2^53."""
     import pandas as pd
 
     names = _ddl_names(schema) if isinstance(schema, str) else schema.fieldNames()
-    pdf = pd.DataFrame(list(rows), columns=names)
+    pdf = pd.DataFrame(list(rows), columns=names, dtype=object)
     return spark.createDataFrame(pdf, schema=schema)
 
 
@@ -217,7 +228,7 @@ def _estimate_scan_parts(
     per_split_file_cap = max(1, max_pb // max(1, open_cost))
     if len(files) >= per_split_file_cap * target:
         return len(files)
-    paths = []
+    keys = []
     total = 0
     for f in files:
         p = f
@@ -226,10 +237,11 @@ def _estimate_scan_parts(
             while p.startswith("//"):
                 p = p[1:]
         try:
-            total += os.path.getsize(p)
+            st = os.stat(p)
         except OSError:
             return None  # non-local URI: exact RDD probe instead
-        paths.append(p)
+        total += st.st_size
+        keys.append((p, st.st_size, st.st_mtime_ns))
     charged = total + open_cost * len(files)
     min_pn = spark.conf.get("spark.sql.files.minPartitionNum", None) or spark.conf.get(
         "spark.sql.leafNodeDefaultParallelism", None
@@ -238,17 +250,23 @@ def _estimate_scan_parts(
     bytes_per_core = charged // max(1, min_pn)
     max_split = min(max_pb, max(open_cost, bytes_per_core))
     est = -(-charged // max(1, max_split))
-    if est > 1 and all(p.endswith(".parquet") for p in paths):
+    if est > 1 and all(k[0].endswith(".parquet") for k in keys):
         try:
-            import pyarrow.parquet as papq
-
-            est = min(
-                est,
-                sum(papq.ParquetFile(p).metadata.num_row_groups for p in paths),
-            )
+            est = min(est, sum(_row_groups(k) for k in keys))
         except Exception:
             pass  # unreadable footer: keep the byte-based estimate
     return max(1, est)
+
+
+def _row_groups(key: tuple[str, int, int]) -> int:
+    """Row-group count of the parquet file ``key[0]``, memoized in
+    :data:`_ROW_GROUP_CACHE`."""
+    n = _ROW_GROUP_CACHE.get(key)
+    if n is None:
+        import pyarrow.parquet as papq
+
+        n = _ROW_GROUP_CACHE[key] = papq.ParquetFile(key[0]).metadata.num_row_groups
+    return n
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

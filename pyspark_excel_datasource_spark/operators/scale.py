@@ -723,7 +723,10 @@ def bloom_semi_join(
     key = (app_id, tuple(arr))
     bloom = _BLOOM_COLUMN_MEMO.get(key)
     if bloom is None:
-        _BLOOM_COLUMN_MEMO.clear()  # stale-gateway handles are useless
+        # drop only other applications' entries: their gateway handles
+        # are dead, while this session's other word-arrays stay live
+        for stale in [k for k in _BLOOM_COLUMN_MEMO if k[0] != app_id]:
+            del _BLOOM_COLUMN_MEMO[stale]
         bloom = F.lit([int(w) for w in arr]).cast("array<bigint>")
         _BLOOM_COLUMN_MEMO[key] = bloom
 

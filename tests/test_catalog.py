@@ -148,3 +148,48 @@ def test_estimate_scan_parts_many_tiny_files(spark, tmp_path):
     assert est is not None
     # 40 files at 4 MB openCost each pack ~32/128MB-split => 2 splits
     assert abs(est - actual) <= 1, (est, actual)
+
+
+def test_estimate_scan_parts_reads_each_footer_once(spark, tmp_path, monkeypatch):
+    """spread() re-estimates on every call; the parquet row-group counts
+    are memoized per file, so a repeat estimate opens no footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark_excel_datasource_spark.catalog import _estimate_scan_parts
+
+    files = []
+    for i in range(3):
+        f = str(tmp_path / f"part-{i}.parquet")
+        pq.write_table(pa.table({"id": pa.array(range(1000), pa.int64())}), f,
+                       row_group_size=250)
+        files.append(f)
+    old_oc = spark.conf.get("spark.sql.files.openCostInBytes")
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *a, **kw):
+        opened.append(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    try:
+        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+        first = _estimate_scan_parts(spark, files, target=64)
+        n_first = len(opened)
+        second = _estimate_scan_parts(spark, files, target=64)
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", old_oc)
+    assert n_first == 3, opened
+    assert len(opened) == 3 and first == second
+
+
+def test_local_df_keeps_null_in_bigint_column(spark):
+    """A None in a bigint column stays NULL and the column's other values
+    stay exact (an inferred pandas dtype makes it float64, which rounds)."""
+    from pyspark_excel_datasource_spark.catalog import local_df
+
+    big = 2**62 + 1
+    df = local_df(spark, [(1, None, "x"), (None, big, None)], "a bigint, b bigint, c string")
+    assert dict(df.dtypes) == {"a": "bigint", "b": "bigint", "c": "string"}
+    assert [tuple(r) for r in df.collect()] == [(1, None, "x"), (None, big, None)]
