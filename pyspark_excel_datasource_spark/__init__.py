@@ -18,6 +18,13 @@ Layout
 - ``sources``    : the Excel DataSource (reader / writer / stream reader),
   rebuilt idiomatically on the Spark 4 Python Data Source API.
 - ``streaming``  : Structured Streaming queries (windows, watermark, dedup).
+- ``_zipcache``  : keeps Python workers from re-reading Spark's zips on
+  every task; installed here, so every process that imports the package
+  has it.
 """
 
+from . import _zipcache
+
 __version__ = "0.1.0"
+
+_zipcache.install()

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window as W
 from ..catalog import table
 from ..functions.determinism import canon, dround, sql_canon, sql_dround
 from ..plans.registry import query
+from ..sources.excel_queries import _fixture_dir
 
 
 @query(
@@ -129,9 +130,7 @@ def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     at different sf_dirs (tests at sf0.001, driver at sf0.01) never race
     on one directory.
     """
-    from ..catalog import sf_tag
-
-    out = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "events_by_type")
+    out = os.path.join(_fixture_dir(sf_dir), "events_by_type")
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type"
     )
@@ -450,9 +449,7 @@ def _evolving_fixture_dir(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..catalog import sf_tag
-
-    out = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "evolving")
+    out = os.path.join(_fixture_dir(sf_dir), "evolving")
     done = os.path.join(out, "_done")
     if not os.path.exists(done):
         os.makedirs(out, exist_ok=True)

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 from ..catalog import local_df, sf_tag, table
 from ..functions.determinism import canon, dsum, sql_canon, sql_dsum
 from ..plans.registry import query
+from ..sources import excel_queries
 
 _N_BUCKETS = 8
 _N_SALTS = 8
@@ -52,12 +53,12 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     def ensure(name: str, base: str, cols: list[str], key: str) -> None:
         if spark.catalog.tableExists(name):
             return
-        # external table at an explicit path under the repo: the default
+        # external table at an explicit path under the fixture root: the default
         # warehouse dir is CWD-relative and the driver may run from
         # anywhere. The in-memory catalog forgets tables between sessions
         # while the files persist, so clear the stale location before the
         # rewrite (it's a derived fixture — always reproducible).
-        loc = os.path.join("/root/repo/.fixtures", "bucketed", name.lower())
+        loc = os.path.join(excel_queries._FIXTURE_ROOT, "bucketed", name.lower())
         if os.path.exists(loc):
             import shutil
 
@@ -312,7 +313,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``tests/test_scale_ops.py`` asserts it). The fixture reuses the
     event_type-partitioned sink layout, namespaced per sf.
     """
-    out = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "events_by_type_dpp")
+    out = os.path.join(excel_queries._fixture_dir(sf_dir), "events_by_type_dpp")
     done = os.path.join(out, "_SUCCESS")
     if not os.path.exists(done):
         (
@@ -332,9 +333,7 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inserts the runtime partition filter, and no python-backed
     # relation appears anywhere (test_dpp_prunes_fact_partitions pins
     # the plan).
-    dim_out = os.path.join(
-        "/root/repo/.fixtures", sf_tag(sf_dir), "event_weights_dim"
-    )
+    dim_out = os.path.join(excel_queries._fixture_dir(sf_dir), "event_weights_dim")
     if not os.path.exists(os.path.join(dim_out, "_SUCCESS")):
         local_df(
             spark,

@@ -24,7 +24,13 @@ from ..plans.registry import query
 from . import minixlsx
 from .excel import register_excel
 
-_FIXTURE_ROOT = "/root/repo/.fixtures"
+#: Root of every derived fixture: ``.fixtures/`` beside the package, in the
+#: checkout. Read at call time, so a caller may point it elsewhere
+#: (perfbench gives each run its own).
+_FIXTURE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".fixtures",
+)
 
 
 def _fixture_dir(sf_dir: str) -> str:

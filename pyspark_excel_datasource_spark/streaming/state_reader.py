@@ -14,8 +14,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import sf_tag
 from ..plans.registry import query
+from ..sources.excel_queries import _fixture_dir
 
 
 def _state_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -23,7 +23,7 @@ def _state_fixture(spark: SparkSession, sf_dir: str) -> str:
     table with a checkpoint, and return the checkpoint path. Idempotent:
     a committed batch 0 marks the fixture done, so warm runs read state
     without re-running the stream."""
-    root = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "state_reader")
+    root = os.path.join(_fixture_dir(sf_dir), "state_reader")
     ck = os.path.join(root, "ckpt")
     src_dir = os.path.join(root, "src")
     if os.path.exists(os.path.join(ck, "commits", "0")):

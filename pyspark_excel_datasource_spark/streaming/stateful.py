@@ -108,9 +108,9 @@ def q_stream_stateful(spark, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..catalog import sf_tag
+    from ..sources.excel_queries import _fixture_dir
 
-    src_dir = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "events_stream")
+    src_dir = os.path.join(_fixture_dir(sf_dir), "events_stream")
     src = os.path.join(sf_dir, "events.parquet")
     dst = os.path.join(src_dir, "events.parquet")
     # freshness check by (size, mtime), not a one-shot marker: a

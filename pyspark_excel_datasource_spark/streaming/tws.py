@@ -67,7 +67,9 @@ def _ship_protoshim(spark) -> None:
         env["PYTHONPATH"] = (
             current + os.pathsep + _PROTOSHIM if current else _PROTOSHIM
         )
-    zip_path = "/root/repo/.fixtures/protoshim.zip"
+    from ..sources import excel_queries
+
+    zip_path = os.path.join(excel_queries._FIXTURE_ROOT, "protoshim.zip")
     if not os.path.exists(zip_path):
         os.makedirs(os.path.dirname(zip_path), exist_ok=True)
         tmp = zip_path + ".tmp"
@@ -158,7 +160,7 @@ def q_stream_tws(spark, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from ..catalog import sf_tag
+    from ..sources.excel_queries import _fixture_dir
 
     if not _HAVE_TWS:  # pragma: no cover - shim is vendored in-repo
         raise ImportError(
@@ -167,7 +169,7 @@ def q_stream_tws(spark, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas state server — neither imported"
         )
     _ship_protoshim(spark)
-    src_dir = os.path.join("/root/repo/.fixtures", sf_tag(sf_dir), "events_stream_tws")
+    src_dir = os.path.join(_fixture_dir(sf_dir), "events_stream_tws")
     src = os.path.join(sf_dir, "events.parquet")
     dst = os.path.join(src_dir, "events.parquet")
     s = os.stat(src)
