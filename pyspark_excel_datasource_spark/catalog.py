@@ -9,6 +9,7 @@ these would be multi-file datasets and the same call sites hold.
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,32 +32,35 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
 
-#: path -> inferred StructType for the immutable driver-generated test
-#: tables. Catalog METADATA only (what a metastore would declare): every
-#: ``spark.read.parquet`` re-infers the schema from the footer (~110 ms
-#: of driver-side IO + py4j per call, paid by every bench sample of
-#: every query), while ``read.schema(...)`` skips inference entirely.
-#: The DATA is still read from parquet on every action — nothing about
-#: results or file contents is cached, and the testdata dirs are
-#: read-only, so the schema cannot drift under the memo.
-_SCHEMA_CACHE: dict = {}
+#: (kind, applicationId or None, key) -> value; see :func:`session_memo`.
+_MEMO: dict[tuple, Any] = {}
 
-#: (path, size, mtime_ns) -> parquet footer row-group count, read by
-#: :func:`_estimate_scan_parts` on every ``spread()``. Same immutable-input
-#: contract as :data:`_SCHEMA_CACHE`; the size and mtime in the key (the
-#: estimate stats every file anyway) make a rewritten file a miss.
-_ROW_GROUP_CACHE: dict = {}
 
-#: (applicationId, path) -> the resolved base DataFrame for the immutable
-#: test tables (r15, guide §7.3 driver work). One step up from the schema
-#: memo and the same metadata-only contract: a DataFrame is an immutable
-#: LAZY plan — handing every caller the same analyzed parquet relation
-#: skips ~20 ms of per-build DataSource resolution + file listing that
-#: every bench sample of every query re-paid, while every action still
-#: scans the parquet files. Keyed by applicationId (the bloom-memo
-#: lesson, ADVICE r14): a plan holds py4j handles that die with their
-#: gateway, so a new session rebuilds instead of reusing stale handles.
-_DF_CACHE: dict = {}
+def session_memo(kind: str, key, build: Callable[[], Any], spark: SparkSession | None = None):
+    """``build()``, memoized under ``(kind, key)``: the one memo of the
+    package, for values derived from inputs that do not change under it
+    (the read-only testdata, write-once fixtures, content-keyed literals).
+
+    Without ``spark`` the value must be pure Python (a schema, a count, a
+    word list); it lives for the process. With ``spark`` it may hold py4j
+    handles (a DataFrame, a Column), which die with their application, so
+    the entry is keyed by ``spark``'s applicationId as well, and a miss
+    first drops every entry of another application. Entries of the
+    current application are never evicted, so callers that alternate
+    between keys never rebuild. A hit costs one applicationId read."""
+    app = spark.sparkContext.applicationId if spark is not None else None
+    k = (kind, app, key)
+    try:
+        return _MEMO[k]
+    except KeyError:
+        pass
+    if app is not None:
+        # list() snapshots the keys in one step, so a thread inserting
+        # meanwhile cannot break the scan
+        for stale in [s for s in list(_MEMO) if s[1] is not None and s[1] != app]:
+            _MEMO.pop(stale, None)
+    value = _MEMO[k] = build()
+    return value
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,65 +73,62 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     applies casting TIMESTAMP_NS → TIMESTAMP) — or plain TIMESTAMP(MICROS),
     which loads directly. Branch on the *loaded* dtype so both generations of
     testdata work.
+
+    The base DataFrame is memoized per application and path: a DataFrame
+    is a lazy plan, so every action still scans the parquet files, while
+    sharing the analyzed relation skips ~20 ms of DataSource resolution
+    and file listing per call.
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, path)
-    cached = _DF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-        from pyspark.sql import functions as F
+    return session_memo("table", path, lambda: _load_table(spark, name, path), spark)
 
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # Integer DIV, not `/`: epoch-nanos exceed 2^53, double division
-            # would round the microsecond.
-            df = df.withColumn(
-                "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
-            )
-        elif ts_type != "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    else:
-        df = _read_parquet(spark, path)
-    if len(_DF_CACHE) > 64 or any(k[0] != key[0] for k in _DF_CACHE):
-        _DF_CACHE.clear()  # stale-gateway handles from ended sessions
-    _DF_CACHE[key] = df
+
+def _load_table(spark: SparkSession, name: str, path: str) -> DataFrame:
+    if name != "events":
+        return _read_parquet(spark, path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read_parquet(spark, path)
+    from pyspark.sql import functions as F
+
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # Integer DIV, not `/`: epoch-nanos exceed 2^53, double division
+        # would round the microsecond.
+        return df.withColumn(
+            "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
+        )
+    if ts_type != "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan with the schema served from :data:`_SCHEMA_CACHE`
-    after first inference (see the cache docstring for why this is
-    metadata, not result caching)."""
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    """Parquet scan with the schema inferred once per path: every
+    ``spark.read.parquet`` re-infers it from the footer (~110 ms of
+    footer IO and py4j per call), while ``read.schema(...)`` skips
+    inference. Only catalog metadata is memoized; every action still
+    reads the data, and the testdata dirs are read-only."""
+    return spark.read.schema(
+        session_memo("schema", path, lambda: spark.read.parquet(path).schema)
+    ).parquet(path)
 
 
 def source_read(spark: SparkSession, fmt: str, path: str, **options) -> DataFrame:
     """Python-DataSource read with the inferred schema memoized per
-    (format, path, options) — same metadata-only contract as
-    :data:`_SCHEMA_CACHE`: a Python source's ``schema()`` is a
-    worker round trip (~130 ms measured) re-paid on every ``load``,
-    while an explicit schema skips it. Use ONLY for write-once fixture
-    paths (``_SUCCESS``-guarded), where the schema cannot drift."""
-    key = (fmt, path, tuple(sorted(options.items())))
+    (format, path, options), as in :func:`_read_parquet`: a Python
+    source's ``schema()`` is a worker round trip (~130 ms measured)
+    re-paid on every ``load``, while an explicit schema skips it. Use
+    ONLY for write-once fixture paths (built by ``ensure_fixture``),
+    where the schema cannot drift."""
     reader = spark.read.format(fmt)
     for k, v in options.items():
         reader = reader.option(k, v)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        df = reader.load(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return reader.schema(sch).load(path)
+    key = (fmt, path, tuple(sorted(options.items())))
+    return reader.schema(
+        session_memo("schema", key, lambda: reader.load(path).schema)
+    ).load(path)
 
 
 def _ddl_names(schema: str) -> list[str]:
@@ -259,14 +260,13 @@ def _estimate_scan_parts(
 
 
 def _row_groups(key: tuple[str, int, int]) -> int:
-    """Row-group count of the parquet file ``key[0]``, memoized in
-    :data:`_ROW_GROUP_CACHE`."""
-    n = _ROW_GROUP_CACHE.get(key)
-    if n is None:
-        import pyarrow.parquet as papq
+    """Row-group count of the parquet file ``key[0]``, memoized per
+    (path, size, mtime_ns), so a rewritten file is a miss."""
+    import pyarrow.parquet as papq
 
-        n = _ROW_GROUP_CACHE[key] = papq.ParquetFile(key[0]).metadata.num_row_groups
-    return n
+    return session_memo(
+        "row_groups", key, lambda: papq.ParquetFile(key[0]).metadata.num_row_groups
+    )
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -302,11 +302,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if parts >= target:
         return df
     return df.repartition(target)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every test table; keys are table names."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -13,7 +13,7 @@ from pyspark.sql.window import Window as W
 from ..catalog import table
 from ..functions.determinism import canon, dround, sql_canon, sql_dround
 from ..plans.registry import query
-from ..sources.excel_queries import _fixture_dir
+from ..sources.excel_queries import _fixture_dir, ensure_fixture
 
 
 @query(
@@ -443,16 +443,13 @@ def _evolving_fixture_dir(sf_dir: str) -> str:
     """Two-generation parquet layout: generation A (even order keys) was
     written before ``o_orderpriority`` existed; generation B (odd keys)
     carries it. Derived deterministically from orders.parquet via pyarrow
-    (no Spark jobs), namespaced by sf tag, and guarded by a done-marker so
-    repeated runs reuse the files."""
+    (no Spark jobs), namespaced by sf tag, built once (ensure_fixture)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    out = os.path.join(_fixture_dir(sf_dir), "evolving")
-    done = os.path.join(out, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def build(out: str) -> None:
+        os.makedirs(out)
         t = pq.read_table(
             os.path.join(sf_dir, "orders.parquet"),
             columns=["o_orderkey", "o_totalprice", "o_orderpriority"],
@@ -463,8 +460,8 @@ def _evolving_fixture_dir(sf_dir: str) -> str:
             os.path.join(out, "gen_a.parquet"),
         )
         pq.write_table(t.filter(odd), os.path.join(out, "gen_b.parquet"))
-        open(done, "w").close()
-    return out
+
+    return ensure_fixture(sf_dir, "evolving", build)
 
 
 @query(

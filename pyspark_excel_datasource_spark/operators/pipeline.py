@@ -719,9 +719,7 @@ def q_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, so the hash check IS the algebraic proof that merge(state(A),
     state(B)) == state(A ∪ B).
     """
-    import os
-
-    from ..sources.excel_queries import _fixture_dir
+    from ..sources.excel_queries import ensure_fixture
 
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
 
@@ -734,11 +732,13 @@ def q_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     orders = table(spark, sf_dir, "orders")
-    snap_path = os.path.join(_fixture_dir(sf_dir), "orders_agg_snapshot")
-    if not os.path.exists(os.path.join(snap_path, "_SUCCESS")):
-        _state(orders.filter(F.col("o_orderdate") < cutoff)).write.mode(
-            "overwrite"
-        ).parquet(snap_path)
+    snap_path = ensure_fixture(
+        sf_dir,
+        "orders_agg_snapshot",
+        lambda out: _state(orders.filter(F.col("o_orderdate") < cutoff))
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     snapshot = spark.read.parquet(snap_path)
     delta = _state(orders.filter(F.col("o_orderdate") >= cutoff))
     return (

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import local_df, sf_tag, table
+from ..catalog import local_df, session_memo, sf_tag, table
 from ..functions.determinism import canon, dsum, sql_canon, sql_dsum
 from ..plans.registry import query
 from ..sources import excel_queries
@@ -313,17 +313,16 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``tests/test_scale_ops.py`` asserts it). The fixture reuses the
     event_type-partitioned sink layout, namespaced per sf.
     """
-    out = os.path.join(excel_queries._fixture_dir(sf_dir), "events_by_type_dpp")
-    done = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(done):
-        (
-            table(spark, sf_dir, "events")
-            .select("event_id", "user_id", "value", "event_type")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(out)
-        )
-    fact = spark.read.parquet(out)
+    fact_out = excel_queries.ensure_fixture(
+        sf_dir,
+        "events_by_type_dpp",
+        lambda out: table(spark, sf_dir, "events")
+        .select("event_id", "user_id", "value", "event_type")
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(out),
+    )
+    fact = spark.read.parquet(fact_out)
     # The dim must be a real TABLE scan (r15): an Arrow-local literal
     # frame gets its filter constant-folded into the LocalRelation by
     # ConvertToLocalRelation, and with no selective predicate left the
@@ -333,13 +332,15 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inserts the runtime partition filter, and no python-backed
     # relation appears anywhere (test_dpp_prunes_fact_partitions pins
     # the plan).
-    dim_out = os.path.join(excel_queries._fixture_dir(sf_dir), "event_weights_dim")
-    if not os.path.exists(os.path.join(dim_out, "_SUCCESS")):
-        local_df(
+    dim_out = excel_queries.ensure_fixture(
+        sf_dir,
+        "event_weights_dim",
+        lambda out: local_df(
             spark,
             [("click", 1.0), ("view", 0.5), ("purchase", 2.0), ("signup", 3.0)],
             "event_type string, weight double",
-        ).coalesce(1).write.mode("overwrite").parquet(dim_out)
+        ).coalesce(1).write.mode("overwrite").parquet(out),
+    )
     dim = spark.read.parquet(dim_out).filter(F.col("weight") <= 1.0)
     return (
         fact.join(F.broadcast(dim), "event_type")
@@ -625,13 +626,13 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 7000)
         .select("c_custkey")
     )
-    # memoize the 8 KiB bloom literal per sf_dir: testdata is immutable,
-    # so warm bench runs measure the probe instead of re-collecting the
-    # build (VERDICT r7 #10); at 100 TB the build is per-job and amortized
-    prebuilt = _BLOOM_LITERAL_MEMO.get(sf_dir)
-    if prebuilt is None:
-        prebuilt = build_bloom_words(dim, "c_custkey")
-        _BLOOM_LITERAL_MEMO[sf_dir] = prebuilt
+    # memoize the 8 KiB bloom word array (pure Python) per sf_dir:
+    # testdata is immutable, so warm bench runs measure the probe instead
+    # of re-collecting the build (VERDICT r7 #10); at 100 TB the build is
+    # per-job and amortized
+    prebuilt = session_memo(
+        "bloom_words", sf_dir, lambda: build_bloom_words(dim, "c_custkey")
+    )
     exact = bloom_semi_join(
         orders, dim, "o_custkey", "c_custkey", prebuilt=prebuilt
     )
@@ -645,19 +646,6 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: for the exact semi join and lets it shuffle: ~8M 8-byte keys ≈ 64 MB of
 #: build-side rows, past the point a 1000-executor broadcast stays cheap.
 _BLOOM_BROADCAST_MAX_ROWS = 8_000_000
-
-#: q_join_bloom's per-sf_dir memo of the built (words, n_dim) literal —
-#: sound because the testdata dirs are immutable; 8 KiB per entry.
-_BLOOM_LITERAL_MEMO: dict[str, tuple[list[int], int]] = {}
-
-#: (app id, word-array) -> the constructed ArrayType literal Column (a
-#: JVM-side Literal is plan-independent and reusable; building it from a
-#: python list costs ~0.6 s of py4j per call — see bloom_semi_join).
-#: Keyed by the owning SparkContext's applicationId (ADVICE r14): unlike
-#: the pure-python word-array memo above, the cached Column holds a py4j
-#: handle that dies with its gateway, so an in-process session restart
-#: must rebuild rather than reuse a stale handle.
-_BLOOM_COLUMN_MEMO: dict[tuple, F.Column] = {}
 
 
 def build_bloom_words(dim: DataFrame, dim_key: str) -> tuple[list[int], int]:
@@ -713,21 +701,14 @@ def bloom_semi_join(
     # int64 words and constant-folds away. The literal COLUMN itself is
     # memoized per word-array (r14): F.lit over a 1024-long python list
     # pays a per-element py4j conversion — measured 585 ms per call —
-    # while reusing the already-built JVM Literal is free. Same
-    # lifetime/soundness as the word-array memo it sits beside.
-    from pyspark.sql import SparkSession
-
-    sess = SparkSession.getActiveSession()
-    app_id = sess.sparkContext.applicationId if sess is not None else None
-    key = (app_id, tuple(arr))
-    bloom = _BLOOM_COLUMN_MEMO.get(key)
-    if bloom is None:
-        # drop only other applications' entries: their gateway handles
-        # are dead, while this session's other word-arrays stay live
-        for stale in [k for k in _BLOOM_COLUMN_MEMO if k[0] != app_id]:
-            del _BLOOM_COLUMN_MEMO[stale]
-        bloom = F.lit([int(w) for w in arr]).cast("array<bigint>")
-        _BLOOM_COLUMN_MEMO[key] = bloom
+    # while reusing the already-built JVM Literal is free. The Column
+    # holds a py4j handle, so the memo is per application.
+    bloom = session_memo(
+        "bloom_column",
+        tuple(arr),
+        lambda: F.lit([int(w) for w in arr]).cast("array<bigint>"),
+        fact.sparkSession,
+    )
 
     # scalar bit tests, built as SQL expressions over the fact key so the
     # whole probe folds into the scan stage's filter; the INT seed literal

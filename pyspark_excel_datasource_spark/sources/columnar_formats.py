@@ -25,19 +25,18 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..plans.registry import query
-from .excel_queries import _fixture_dir
+from .excel_queries import _fixture_dir, ensure_fixture
 
 
 def _materialize_orders_orc(spark: SparkSession, sf_dir: str) -> str:
-    """orders.parquet → orders.orc/ (multi-part directory), idempotent."""
-    out = os.path.join(_fixture_dir(sf_dir), "orders.orc")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-            .write.mode("overwrite")
-            .orc(out)
-        )
-    return out
+    """orders.parquet → orders.orc/ (multi-part directory)."""
+    return ensure_fixture(
+        sf_dir,
+        "orders.orc",
+        lambda out: spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        .write.mode("overwrite")
+        .orc(out),
+    )
 
 
 @query(
@@ -206,20 +205,19 @@ def q_sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialize_orders_avro(spark: SparkSession, sf_dir: str) -> str:
     """orders.parquet → orders.avro/ (multi-part directory written by the
-    pyavro staged-commit writer), idempotent per SF."""
+    pyavro staged-commit writer)."""
     from .avrofile import register_pyavro
 
     register_pyavro(spark)
-    out = os.path.join(_fixture_dir(sf_dir), "orders.avro")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-            .repartition(4)
-            .write.format("pyavro")
-            .mode("overwrite")
-            .save(out)
-        )
-    return out
+    return ensure_fixture(
+        sf_dir,
+        "orders.avro",
+        lambda out: spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        .repartition(4)
+        .write.format("pyavro")
+        .mode("overwrite")
+        .save(out),
+    )
 
 
 @query(
@@ -253,8 +251,8 @@ def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _materialize_orders_avro(spark, sf_dir)
     # source_read memoizes the inferred schema per fixture path (r14):
     # the Python source's schema() round trip measured ~130 ms per load,
-    # re-paid on every bench sample; the fixture is _SUCCESS-guarded
-    # write-once so the schema cannot drift.
+    # re-paid on every bench sample; the fixture is write-once
+    # (ensure_fixture), so the schema cannot drift.
     from ..catalog import source_read
 
     return (
@@ -379,13 +377,11 @@ def q_stream_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialize_docs_bin(sf_dir: str) -> str:
     """Every 5th document's text → one UTF-8 ``doc_<id>.txt`` file —
-    the opaque-blob fixture for the binaryFile source (idempotent)."""
+    the opaque-blob fixture for the binaryFile source."""
     import pyarrow.parquet as pq
 
-    out_dir = os.path.join(_fixture_dir(sf_dir), "docs_bin")
-    done = os.path.join(out_dir, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out_dir, exist_ok=True)
+    def build(out_dir: str) -> None:
+        os.makedirs(out_dir)
         t = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "text"],
@@ -399,9 +395,8 @@ def _materialize_docs_bin(sf_dir: str) -> str:
                 os.path.join(out_dir, f"doc_{doc_id}.txt"), "wb"
             ) as fh:
                 fh.write(text.encode("utf-8"))
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return out_dir
+
+    return ensure_fixture(sf_dir, "docs_bin", build)
 
 
 @query(

@@ -39,28 +39,25 @@ from .deltalog import (
     vacuum,
     write_delta,
 )
-from .excel_queries import _fixture_dir
+from .excel_queries import _fixture_dir, ensure_fixture
 
 
 def _materialize_orders_delta(spark: SparkSession, sf_dir: str) -> str:
     """orders.parquet → 3-version Delta table, idempotent per SF."""
-    out = os.path.join(_fixture_dir(sf_dir), "orders_delta")
-    done = os.path.join(out, "_delta_log", f"{2:020d}.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    orders = table(spark, sf_dir, "orders")
-    third = F.col("o_orderkey") % 3 == 0
-    write_delta(
-        spark, orders.filter(~third), out, mode="append",
-        partition_by=("o_orderstatus",),
-    )
-    write_delta(
-        spark, orders.filter(third), out, mode="append",
-        partition_by=("o_orderstatus",),
-    )
-    delete_partitions(out, {"o_orderstatus": "P"})
-    return out
+    def build(out: str) -> None:
+        orders = table(spark, sf_dir, "orders")
+        third = F.col("o_orderkey") % 3 == 0
+        write_delta(
+            spark, orders.filter(~third), out, mode="append",
+            partition_by=("o_orderstatus",),
+        )
+        write_delta(
+            spark, orders.filter(third), out, mode="append",
+            partition_by=("o_orderstatus",),
+        )
+        delete_partitions(out, {"o_orderstatus": "P"})
+
+    return ensure_fixture(sf_dir, "orders_delta", build)
 
 
 @query(
@@ -544,10 +541,7 @@ def q_delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected (silently dropping a new column on read is the bug the
     guard prevents) — pinned in ``tests/test_delta.py``.
     """
-    out = os.path.join(_fixture_dir(sf_dir), "supplier_evolve_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         sup = table(spark, sf_dir, "supplier")
         even = F.col("s_suppkey") % 2 == 0
         write_delta(
@@ -560,6 +554,8 @@ def q_delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
             merge_schema=True,
         )
+
+    out = ensure_fixture(sf_dir, "supplier_evolve_delta", build)
     return read_delta(spark, out).select(
         "s_suppkey",
         "s_name",
@@ -818,86 +814,84 @@ def _materialize_mapped_delta(spark: SparkSession, sf_dir: str) -> str:
     partitionValues are keyed by physical name. Idempotent per SF."""
     import json
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_mapped_delta")
-    done = os.path.join(out, "_delta_log", f"{0:020d}.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    staging = out + "_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    cust = table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("col-ck01"),
-        F.col("c_acctbal").cast("double").alias("col-ab02"),
-        F.col("c_mktsegment").alias("col-ms03"),
-    )
-    # one distributed hive-partitioned write; files then enter the log
-    # under their partition-dir-relative paths (Delta does not require
-    # hive layout — partitionValues in the log are authoritative — but
-    # reusing it keeps the fixture one write job)
-    cust.write.partitionBy("col-ms03").parquet(staging)
-    os.makedirs(os.path.join(out, "_delta_log"))
-    adds = []
-    for dirpath, _, names in os.walk(staging):
-        for name in names:
-            if not name.endswith(".parquet"):
-                continue
-            rel = os.path.relpath(os.path.join(dirpath, name), staging)
-            seg = os.path.basename(os.path.dirname(rel)).split("=", 1)[1]
-            dst = os.path.join(out, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.move(os.path.join(dirpath, name), dst)
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": {"col-ms03": seg},
-                        "size": os.path.getsize(dst),
-                        "modificationTime": 0,
-                        "dataChange": True,
+    def build(out: str) -> None:
+        staging = out + "_staging"
+        shutil.rmtree(staging, ignore_errors=True)
+        cust = table(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("col-ck01"),
+            F.col("c_acctbal").cast("double").alias("col-ab02"),
+            F.col("c_mktsegment").alias("col-ms03"),
+        )
+        # one distributed hive-partitioned write; files then enter the log
+        # under their partition-dir-relative paths (Delta does not require
+        # hive layout — partitionValues in the log are authoritative — but
+        # reusing it keeps the fixture one write job)
+        cust.write.partitionBy("col-ms03").parquet(staging)
+        os.makedirs(os.path.join(out, "_delta_log"))
+        adds = []
+        for dirpath, _, names in os.walk(staging):
+            for name in names:
+                if not name.endswith(".parquet"):
+                    continue
+                rel = os.path.relpath(os.path.join(dirpath, name), staging)
+                seg = os.path.basename(os.path.dirname(rel)).split("=", 1)[1]
+                dst = os.path.join(out, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                shutil.move(os.path.join(dirpath, name), dst)
+                adds.append(
+                    {
+                        "add": {
+                            "path": rel,
+                            "partitionValues": {"col-ms03": seg},
+                            "size": os.path.getsize(dst),
+                            "modificationTime": 0,
+                            "dataChange": True,
+                        }
                     }
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+                )
+        shutil.rmtree(staging, ignore_errors=True)
 
-    def fld(name: str, typ: str, phys: str, fid: int) -> dict:
-        return {
-            "name": name,
-            "type": typ,
-            "nullable": True,
-            "metadata": {
-                "delta.columnMapping.id": fid,
-                "delta.columnMapping.physicalName": phys,
-            },
-        }
-
-    schema = {
-        "type": "struct",
-        "fields": [
-            fld("c_custkey", "long", "col-ck01", 1),
-            fld("c_acctbal", "double", "col-ab02", 2),
-            fld("c_mktsegment", "string", "col-ms03", 3),
-        ],
-    }
-    actions = [
-        {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
-        {
-            "metaData": {
-                "id": "customer-mapped",
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema),
-                "partitionColumns": ["c_mktsegment"],
-                "configuration": {
-                    "delta.columnMapping.mode": "name",
-                    "delta.columnMapping.maxColumnId": "3",
+        def fld(name: str, typ: str, phys: str, fid: int) -> dict:
+            return {
+                "name": name,
+                "type": typ,
+                "nullable": True,
+                "metadata": {
+                    "delta.columnMapping.id": fid,
+                    "delta.columnMapping.physicalName": phys,
                 },
             }
-        },
-        *sorted(adds, key=lambda a: a["add"]["path"]),
-    ]
-    with open(done, "w", encoding="utf-8") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-    return out
+
+        schema = {
+            "type": "struct",
+            "fields": [
+                fld("c_custkey", "long", "col-ck01", 1),
+                fld("c_acctbal", "double", "col-ab02", 2),
+                fld("c_mktsegment", "string", "col-ms03", 3),
+            ],
+        }
+        actions = [
+            {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+            {
+                "metaData": {
+                    "id": "customer-mapped",
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": json.dumps(schema),
+                    "partitionColumns": ["c_mktsegment"],
+                    "configuration": {
+                        "delta.columnMapping.mode": "name",
+                        "delta.columnMapping.maxColumnId": "3",
+                    },
+                }
+            },
+            *sorted(adds, key=lambda a: a["add"]["path"]),
+        ]
+        log = os.path.join(out, "_delta_log", f"{0:020d}.json")
+        with open(log, "w", encoding="utf-8") as fh:
+            for a in actions:
+                fh.write(json.dumps(a) + "\n")
+
+    return ensure_fixture(sf_dir, "customer_mapped_delta", build)
 
 
 @query(
@@ -957,74 +951,72 @@ def _materialize_dv_delta(spark: SparkSession, sf_dir: str) -> str:
 
     from .dvbitmap import DV_MAGIC, z85_encode
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_dv_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = (
-        table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_acctbal", "c_mktsegment")
-        .orderBy("c_custkey")
-        .coalesce(1)
-        .sortWithinPartitions("c_custkey")
-    )
-    write_delta(spark, cust, out)
-    snap = snapshot(out)
-    (rel,) = snap.files
-    keys = [
-        r.c_custkey
-        for r in read_delta(spark, out).orderBy("c_custkey").select("c_custkey").collect()
-    ]
-    deleted = [i for i, k in enumerate(keys) if k % 7 == 0]
+    def build(out: str) -> None:
+        cust = (
+            table(spark, sf_dir, "customer")
+            .select("c_custkey", "c_acctbal", "c_mktsegment")
+            .orderBy("c_custkey")
+            .coalesce(1)
+            .sortWithinPartitions("c_custkey")
+        )
+        write_delta(spark, cust, out)
+        snap = snapshot(out)
+        (rel,) = snap.files
+        keys = [
+            r.c_custkey
+            for r in read_delta(spark, out).orderBy("c_custkey").select("c_custkey").collect()
+        ]
+        deleted = [i for i, k in enumerate(keys) if k % 7 == 0]
 
-    # inline DV: portable no-run roaring container(s) over the positions
-    by_key: dict[int, list[int]] = {}
-    for v in deleted:
-        by_key.setdefault(v >> 16, []).append(v & 0xFFFF)
-    ks = sorted(by_key)
-    bm = struct.pack("<i", 12346) + struct.pack("<i", len(ks))
-    for k in ks:
-        bm += struct.pack("<HH", k, len(by_key[k]) - 1)
-    pos = 8 + 8 * len(ks)
-    offs, data = b"", b""
-    for k in ks:
-        offs += struct.pack("<I", pos)
-        chunk = struct.pack(f"<{len(by_key[k])}H", *by_key[k])
-        data += chunk
-        pos += len(chunk)
-    blob = struct.pack("<i", DV_MAGIC) + struct.pack("<q", 1) + bm + offs + data
-    padded = blob + b"\x00" * (-len(blob) % 4)
-    descriptor = {
-        "storageType": "i",
-        "pathOrInlineDv": z85_encode(padded),
-        "sizeInBytes": len(blob),
-        "cardinality": len(deleted),
-    }
-    actions = [
-        {
-            "protocol": {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": ["deletionVectors"],
-                "writerFeatures": ["deletionVectors"],
-            }
-        },
-        {
-            "add": {
-                "path": rel,
-                "partitionValues": {},
-                "size": 1,
-                "modificationTime": 0,
-                "dataChange": True,
-                "deletionVector": descriptor,
-            }
-        },
-    ]
-    with open(done, "w", encoding="utf-8") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-    return out
+        # inline DV: portable no-run roaring container(s) over the positions
+        by_key: dict[int, list[int]] = {}
+        for v in deleted:
+            by_key.setdefault(v >> 16, []).append(v & 0xFFFF)
+        ks = sorted(by_key)
+        bm = struct.pack("<i", 12346) + struct.pack("<i", len(ks))
+        for k in ks:
+            bm += struct.pack("<HH", k, len(by_key[k]) - 1)
+        pos = 8 + 8 * len(ks)
+        offs, data = b"", b""
+        for k in ks:
+            offs += struct.pack("<I", pos)
+            chunk = struct.pack(f"<{len(by_key[k])}H", *by_key[k])
+            data += chunk
+            pos += len(chunk)
+        blob = struct.pack("<i", DV_MAGIC) + struct.pack("<q", 1) + bm + offs + data
+        padded = blob + b"\x00" * (-len(blob) % 4)
+        descriptor = {
+            "storageType": "i",
+            "pathOrInlineDv": z85_encode(padded),
+            "sizeInBytes": len(blob),
+            "cardinality": len(deleted),
+        }
+        actions = [
+            {
+                "protocol": {
+                    "minReaderVersion": 3,
+                    "minWriterVersion": 7,
+                    "readerFeatures": ["deletionVectors"],
+                    "writerFeatures": ["deletionVectors"],
+                }
+            },
+            {
+                "add": {
+                    "path": rel,
+                    "partitionValues": {},
+                    "size": 1,
+                    "modificationTime": 0,
+                    "dataChange": True,
+                    "deletionVector": descriptor,
+                }
+            },
+        ]
+        log = os.path.join(out, "_delta_log", f"{1:020d}.json")
+        with open(log, "w", encoding="utf-8") as fh:
+            for a in actions:
+                fh.write(json.dumps(a) + "\n")
+
+    return ensure_fixture(sf_dir, "customer_dv_delta", build)
 
 
 @query(
@@ -1072,35 +1064,32 @@ def _materialize_constrained_delta(spark: SparkSession, sf_dir: str) -> str:
     append (balances shifted -10000) must be REJECTED leaving no partial
     state. Final content therefore equals the full base table.
     Idempotent per SF."""
-    out = os.path.join(_fixture_dir(sf_dir), "customer_constrained_delta")
-    done = os.path.join(out, "_delta_log", f"{2:020d}.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    from .deltalog import DeltaConstraintViolationError, add_check_constraint
+    def build(out: str) -> None:
+        from .deltalog import DeltaConstraintViolationError, add_check_constraint
 
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    write_delta(spark, cust.filter(F.col("c_custkey") % 2 == 0), out)
-    add_check_constraint(spark, out, "bal_floor", "c_acctbal >= -1000")
-    write_delta(
-        spark, cust.filter(F.col("c_custkey") % 2 == 1), out, mode="append"
-    )
-    try:
-        write_delta(
-            spark,
-            cust.limit(10).withColumn(
-                "c_acctbal", F.col("c_acctbal") - 10000
-            ),
-            out,
-            mode="append",
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal", "c_mktsegment"
         )
-    except DeltaConstraintViolationError:
-        pass
-    else:  # pragma: no cover - the gate must reject
-        raise AssertionError("violating append was not rejected")
-    return out
+        write_delta(spark, cust.filter(F.col("c_custkey") % 2 == 0), out)
+        add_check_constraint(spark, out, "bal_floor", "c_acctbal >= -1000")
+        write_delta(
+            spark, cust.filter(F.col("c_custkey") % 2 == 1), out, mode="append"
+        )
+        try:
+            write_delta(
+                spark,
+                cust.limit(10).withColumn(
+                    "c_acctbal", F.col("c_acctbal") - 10000
+                ),
+                out,
+                mode="append",
+            )
+        except DeltaConstraintViolationError:
+            pass
+        else:  # pragma: no cover - the gate must reject
+            raise AssertionError("violating append was not rejected")
+
+    return ensure_fixture(sf_dir, "customer_constrained_delta", build)
 
 
 @query(
@@ -1160,10 +1149,7 @@ def q_delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB pipeline needs after a bad backfill."""
     from .deltalog import restore_table
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_restore_delta")
-    done = os.path.join(out, "_delta_log", f"{2:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment"
         )
@@ -1175,6 +1161,8 @@ def q_delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
         restore_table(spark, out, 0)
+
+    out = ensure_fixture(sf_dir, "customer_restore_delta", build)
     return (
         read_delta(spark, out)
         .groupBy("c_mktsegment")
@@ -1210,15 +1198,14 @@ def q_delta_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewriting the files; ``optimize`` later folds DVs into data."""
     from .deltalog import delete_where
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_mor_delete_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment"
         )
         write_delta(spark, cust, out)
         delete_where(spark, out, "c_acctbal < 0", mode="deletion-vectors")
+
+    out = ensure_fixture(sf_dir, "customer_mor_delete_delta", build)
     return (
         read_delta(spark, out)
         .groupBy("c_mktsegment")
@@ -1292,10 +1279,7 @@ def q_delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .deltalog import update_where
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_update_cow_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         orders = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1312,6 +1296,8 @@ def q_delta_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"o_orderkey <= {cut}",
             {"o_orderstatus": "'U'", "o_totalprice": "o_totalprice + 100.0"},
         )
+
+    out = ensure_fixture(sf_dir, "orders_update_cow_delta", build)
     return (
         read_delta(spark, out)
         .groupBy("o_orderstatus")
@@ -1352,10 +1338,7 @@ def q_delta_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     every touched 1 GB file; ``optimize`` later folds the DVs away."""
     from .deltalog import update_where
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_mor_update_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment"
         )
@@ -1367,6 +1350,8 @@ def q_delta_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"c_acctbal": "-c_acctbal"},
             mode="deletion-vectors",
         )
+
+    out = ensure_fixture(sf_dir, "customer_mor_update_delta", build)
     return (
         read_delta(spark, out)
         .groupBy("c_mktsegment")
@@ -1411,17 +1396,15 @@ def q_delta_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-directional — the source census is still the full fixture.
     Scale: forking a 100 TB table for an experiment costs one commit.
     """
-    from .deltalog import clone_delta
+    from .deltalog import clone_delta, delete_where
 
     src = _materialize_orders_delta(spark, sf_dir)
-    out = os.path.join(_fixture_dir(sf_dir), "orders_clone_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
-        clone_delta(src, out)
-        from .deltalog import delete_where
 
+    def build(out: str) -> None:
+        clone_delta(src, out)
         delete_where(spark, out, "o_orderpriority = '1-URGENT'")
+
+    out = ensure_fixture(sf_dir, "orders_clone_delta", build)
 
     def census(df: DataFrame, side: str) -> DataFrame:
         return (
@@ -1529,10 +1512,7 @@ def q_delta_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: generated columns are the classic partition-derivation
     device (partition by o_year without the writer trusting callers).
     """
-    out = os.path.join(_fixture_dir(sf_dir), "orders_generated_delta")
-    done = os.path.join(out, "_delta_log", f"{1:020d}.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         orders = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderdate"
         )
@@ -1544,6 +1524,8 @@ def q_delta_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
             generated={"o_year": "year(o_orderdate)"},
         )
         write_delta(spark, orders.filter(third), out, mode="append")
+
+    out = ensure_fixture(sf_dir, "orders_generated_delta", build)
     return (
         read_delta(spark, out)
         .groupBy("o_year")
@@ -1945,25 +1927,20 @@ def _materialize_dv_stream_delta(spark: SparkSession, sf_dir: str) -> str:
     MOR delete), v2 appends the odd-key customers. Idempotent per SF."""
     from .deltalog import delete_where
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_dv_stream_delta")
-    # v2 is the LAST version the three commits write (v0 append, v1 DV
-    # delete, v2 append) — checking v3 defeated the cache (ADVICE r14).
-    done = os.path.join(out, "_delta_log", f"{2:020d}.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    write_delta(spark, cust.filter(F.col("c_custkey") % 2 == 0).coalesce(1), out)
-    delete_where(spark, out, "c_acctbal < 0", mode="deletion-vectors")
-    write_delta(
-        spark,
-        cust.filter(F.col("c_custkey") % 2 == 1).coalesce(1),
-        out,
-        mode="append",
-    )
-    return out
+    def build(out: str) -> None:
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal", "c_mktsegment"
+        )
+        write_delta(spark, cust.filter(F.col("c_custkey") % 2 == 0).coalesce(1), out)
+        delete_where(spark, out, "c_acctbal < 0", mode="deletion-vectors")
+        write_delta(
+            spark,
+            cust.filter(F.col("c_custkey") % 2 == 1).coalesce(1),
+            out,
+            mode="append",
+        )
+
+    return ensure_fixture(sf_dir, "customer_dv_stream_delta", build)
 
 
 @query(

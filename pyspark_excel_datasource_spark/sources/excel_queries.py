@@ -14,7 +14,10 @@ tests/test_excel_connector.py:189-216), q_stream_discover ↔ R7/R8.
 
 from __future__ import annotations
 
+import fcntl
 import os
+import shutil
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -41,28 +44,65 @@ def _fixture_dir(sf_dir: str) -> str:
     return d
 
 
+def ensure_fixture(sf_dir: str | None, name: str, build: Callable[[str], object]) -> str:
+    """Path of the derived fixture ``name`` for ``sf_dir`` (``None``: one
+    fixture shared by every scale factor, at the root), built at most once.
+
+    The fixture counts as complete only once its marker ``.{name}.done``,
+    written after ``build`` returns, exists beside it: the commit-log rule
+    of Structured Streaming, where work counts once a commit record
+    written after it exists. On a miss the caller takes an exclusive
+    ``flock`` on ``.{name}.lock``, checks the marker again, removes any
+    partial output and runs ``build(path)``, which creates ``path`` (a
+    file or a directory). A concurrent caller waits on the lock and then
+    returns the finished fixture; a build that raises leaves no marker, so
+    the next call starts again from nothing. The output is built in
+    place, not renamed into place: Iceberg metadata records the table's
+    absolute location and a shallow clone its source's, so a moved
+    directory need not read the same. Marker and lock sit beside the
+    output, never inside it, and their leading ``.`` hides them from
+    Spark's file listing."""
+    base = _fixture_dir(sf_dir) if sf_dir is not None else _FIXTURE_ROOT
+    path = os.path.join(base, name)
+    marker = os.path.join(base, f".{name}.done")
+    if os.path.exists(marker):
+        return path
+    os.makedirs(base, exist_ok=True)
+    with open(os.path.join(base, f".{name}.lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not os.path.exists(marker):
+            if os.path.isdir(path) and not os.path.islink(path):
+                shutil.rmtree(path)
+            elif os.path.lexists(path):
+                os.remove(path)
+            build(path)
+            open(marker, "w").close()
+    return path
+
+
 def _materialize_nation_xlsx(sf_dir: str) -> str:
-    """nation.parquet → nation.xlsx (single file), idempotent."""
-    out = os.path.join(_fixture_dir(sf_dir), "nation.xlsx")
-    if not os.path.exists(out):
-        frame = pq.read_table(os.path.join(sf_dir, "nation.parquet")).to_pandas()
-        minixlsx.write_xlsx(out, frame)
-    return out
+    """nation.parquet → nation.xlsx (single file)."""
+    return ensure_fixture(
+        sf_dir,
+        "nation.xlsx",
+        lambda out: minixlsx.write_xlsx(
+            out, pq.read_table(os.path.join(sf_dir, "nation.parquet")).to_pandas()
+        ),
+    )
 
 
 def _materialize_region_dir(sf_dir: str) -> str:
     """region.parquet → one xlsx per region row-group-ish split (5 files)."""
-    out_dir = os.path.join(_fixture_dir(sf_dir), "region_multi")
-    done = os.path.join(out_dir, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out_dir, exist_ok=True)
+
+    def build(out_dir: str) -> None:
+        os.makedirs(out_dir)
         frame = pq.read_table(os.path.join(sf_dir, "region.parquet")).to_pandas()
         for key, part in frame.groupby("r_regionkey"):
             minixlsx.write_xlsx(
                 os.path.join(out_dir, f"region-{key}.xlsx"), part.reset_index(drop=True)
             )
-        open(done, "w").close()
-    return out_dir
+
+    return ensure_fixture(sf_dir, "region_multi", build)
 
 
 @query(
@@ -208,14 +248,13 @@ def _materialize_dims_workbook(sf_dir: str) -> str:
     """nation + region as TWO sheets of ONE workbook (idempotent). The
     other Excel fixtures are single-sheet, so this is the file that
     actually exercises sheet resolution."""
-    out = os.path.join(_fixture_dir(sf_dir), "dims.xlsx")
-    if not os.path.exists(out):
+
+    def build(out: str) -> None:
         nation = pq.read_table(os.path.join(sf_dir, "nation.parquet")).to_pandas()
         region = pq.read_table(os.path.join(sf_dir, "region.parquet")).to_pandas()
-        tmp = out + ".tmp"
-        minixlsx.write_xlsx_multi(tmp, {"nation": nation, "region": region})
-        os.replace(tmp, out)
-    return out
+        minixlsx.write_xlsx_multi(out, {"nation": nation, "region": region})
+
+    return ensure_fixture(sf_dir, "dims.xlsx", build)
 
 
 @query(
@@ -339,9 +378,8 @@ def _materialize_nation_nested_dir(sf_dir: str) -> str:
     """nation.parquet → nested drop-directory layout: one subdirectory per
     region, one xlsx per region's nations (idempotent). A top-level decoy
     .txt proves extension filtering survives the walk."""
-    out_dir = os.path.join(_fixture_dir(sf_dir), "nation_nested")
-    done = os.path.join(out_dir, "_done")
-    if not os.path.exists(done):
+
+    def build(out_dir: str) -> None:
         frame = pq.read_table(os.path.join(sf_dir, "nation.parquet")).to_pandas()
         for key, part in frame.groupby("n_regionkey"):
             sub = os.path.join(out_dir, f"region={key}")
@@ -352,8 +390,8 @@ def _materialize_nation_nested_dir(sf_dir: str) -> str:
             )
         with open(os.path.join(out_dir, "README.txt"), "w") as fh:
             fh.write("decoy: non-xlsx files must be ignored by the walk\n")
-        open(done, "w").close()
-    return out_dir
+
+    return ensure_fixture(sf_dir, "nation_nested", build)
 
 
 @query(
@@ -391,21 +429,19 @@ def q_scan_excel_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _materialize_supplier_sheets_workbook(sf_dir: str) -> str:
     """supplier (suppkey<60) → ONE workbook, three same-schema sheets
     (split by s_nationkey % 3) — the all-sheets union fixture."""
-    out = os.path.join(_fixture_dir(sf_dir), "supplier_shards.xlsx")
-    if not os.path.exists(out):
+
+    def build(out: str) -> None:
         frame = (
             pq.read_table(os.path.join(sf_dir, "supplier.parquet"))
             .to_pandas()
             .query("s_suppkey < 60")[["s_suppkey", "s_name", "s_nationkey", "s_acctbal"]]
         )
-        sheets = {
+        minixlsx.write_xlsx_multi(out, {
             f"shard_{k}": part.reset_index(drop=True)
             for k, part in frame.groupby(frame["s_nationkey"] % 3)
-        }
-        tmp = out + ".tmp"
-        minixlsx.write_xlsx_multi(tmp, sheets)
-        os.replace(tmp, out)
-    return out
+        })
+
+    return ensure_fixture(sf_dir, "supplier_shards.xlsx", build)
 
 
 @query(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import local_df, table
 from ..plans.registry import query
-from .excel_queries import _fixture_dir
+from .excel_queries import _fixture_dir, ensure_fixture
 from .iceberg import (
     expire_snapshots,
     read_iceberg,
@@ -31,21 +31,16 @@ from .iceberg import (
 
 def _materialize_orders_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """orders.parquet → 3-snapshot Iceberg table, idempotent per SF."""
-    import shutil
+    def build(out: str) -> None:
+        orders = table(spark, sf_dir, "orders")
+        third = F.col("o_orderkey") % 3 == 0
+        write_iceberg(spark, orders.filter(~third), out)
+        write_iceberg(spark, orders.filter(third), out, mode="append")
+        write_iceberg(
+            spark, orders.filter(F.col("o_orderstatus") == "F"), out, mode="overwrite"
+        )
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_iceberg")
-    done = os.path.join(out, "metadata", "v3.metadata.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    orders = table(spark, sf_dir, "orders")
-    third = F.col("o_orderkey") % 3 == 0
-    write_iceberg(spark, orders.filter(~third), out)
-    write_iceberg(spark, orders.filter(third), out, mode="append")
-    write_iceberg(
-        spark, orders.filter(F.col("o_orderstatus") == "F"), out, mode="overwrite"
-    )
-    return out
+    return ensure_fixture(sf_dir, "orders_iceberg", build)
 
 
 @query(
@@ -85,25 +80,20 @@ def q_scan_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialize_orders_iceberg_part(spark: SparkSession, sf_dir: str) -> str:
     """orders.parquet → 2-snapshot identity-partitioned Iceberg table."""
-    import shutil
+    def build(out: str) -> None:
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
+        )
+        third = F.col("o_orderkey") % 3 == 0
+        write_iceberg(
+            spark, orders.filter(~third), out, partition_by=("o_orderstatus",)
+        )
+        write_iceberg(
+            spark, orders.filter(third), out, mode="append",
+            partition_by=("o_orderstatus",),
+        )
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_iceberg_part")
-    done = os.path.join(out, "metadata", "v2.metadata.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
-    )
-    third = F.col("o_orderkey") % 3 == 0
-    write_iceberg(
-        spark, orders.filter(~third), out, partition_by=("o_orderstatus",)
-    )
-    write_iceberg(
-        spark, orders.filter(third), out, mode="append",
-        partition_by=("o_orderstatus",),
-    )
-    return out
+    return ensure_fixture(sf_dir, "orders_iceberg_part", build)
 
 
 @query(
@@ -728,132 +718,129 @@ def _materialize_posdel_iceberg(spark: SparkSession, sf_dir: str) -> str:
     key. Key-sorting makes positions == key ranks, which is what makes
     the fixture SQL-oracleable. Idempotent per SF."""
     import json
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .iceberg import _read_avro, _write_avro, snapshot_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_posdel_iceberg")
-    done = os.path.join(out, "data", "pos-delete-0.parquet")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = (
-        table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_acctbal", "c_mktsegment")
-        .orderBy("c_custkey")
-        .coalesce(1)
-        .sortWithinPartitions("c_custkey")
-    )
-    write_iceberg(spark, cust, out)
-    snap = snapshot_iceberg(out)
-    (target,) = snap.files
-    keys = [
-        r.c_custkey
-        for r in read_iceberg(spark, out).orderBy("c_custkey").select("c_custkey").collect()
-    ]
-    positions = [i for i, k in enumerate(keys) if k % 5 == 0]
+    def build(out: str) -> None:
+        cust = (
+            table(spark, sf_dir, "customer")
+            .select("c_custkey", "c_acctbal", "c_mktsegment")
+            .orderBy("c_custkey")
+            .coalesce(1)
+            .sortWithinPartitions("c_custkey")
+        )
+        write_iceberg(spark, cust, out)
+        snap = snapshot_iceberg(out)
+        (target,) = snap.files
+        keys = [
+            r.c_custkey
+            for r in read_iceberg(spark, out).orderBy("c_custkey").select("c_custkey").collect()
+        ]
+        positions = [i for i, k in enumerate(keys) if k % 5 == 0]
+        done = os.path.join(out, "data", "pos-delete-0.parquet")
 
-    pq.write_table(
-        pa.table(
-            {
-                "file_path": pa.array([target] * len(positions), pa.string()),
-                "pos": pa.array(positions, pa.int64()),
-            }
-        ),
-        done,
-    )
-    meta_dir = os.path.join(out, "metadata")
-    v = int(open(os.path.join(meta_dir, "version-hint.text")).read().strip())
-    md_path = os.path.join(meta_dir, f"v{v}.metadata.json")
-    md = json.load(open(md_path))
-    md["format-version"] = 2
-    snap_md = next(
-        s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
-    )
-    mlist = snap_md["manifest-list"]
-    mlist_abs = mlist if os.path.isabs(mlist) else os.path.join(out, mlist)
-    del_manifest = os.path.join(meta_dir, "delete-m0.avro")
-    _write_avro(
-        del_manifest,
-        {
-            "type": "record",
-            "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int"},
-                {"name": "snapshot_id", "type": ["null", "long"], "default": None},
+        pq.write_table(
+            pa.table(
                 {
-                    "name": "data_file",
-                    "type": {
-                        "type": "record",
-                        "name": "data_file",
-                        "fields": [
-                            {"name": "content", "type": "int"},
-                            {"name": "file_path", "type": "string"},
-                            {"name": "file_format", "type": "string"},
-                            {"name": "record_count", "type": "long"},
-                            {"name": "file_size_in_bytes", "type": "long"},
-                        ],
-                    },
-                },
-            ],
-        },
-        [
-            (
-                1,
-                md["current-snapshot-id"],
-                {
-                    "content": 1,
-                    "file_path": os.path.join("data", "pos-delete-0.parquet"),
-                    "file_format": "PARQUET",
-                    "record_count": len(positions),
-                    "file_size_in_bytes": os.path.getsize(done),
-                },
-            )
-        ],
-    )
-    rows = [
-        (
-            m["manifest_path"],
-            m["manifest_length"],
-            m["partition_spec_id"],
-            m["added_snapshot_id"],
-            0,
+                    "file_path": pa.array([target] * len(positions), pa.string()),
+                    "pos": pa.array(positions, pa.int64()),
+                }
+            ),
+            done,
         )
-        for m in _read_avro(mlist_abs)
-    ]
-    rows.append(
-        (
+        meta_dir = os.path.join(out, "metadata")
+        v = int(open(os.path.join(meta_dir, "version-hint.text")).read().strip())
+        md_path = os.path.join(meta_dir, f"v{v}.metadata.json")
+        md = json.load(open(md_path))
+        md["format-version"] = 2
+        snap_md = next(
+            s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
+        )
+        mlist = snap_md["manifest-list"]
+        mlist_abs = mlist if os.path.isabs(mlist) else os.path.join(out, mlist)
+        del_manifest = os.path.join(meta_dir, "delete-m0.avro")
+        _write_avro(
             del_manifest,
-            os.path.getsize(del_manifest),
-            0,
-            md["current-snapshot-id"],
-            1,
-        )
-    )
-    _write_avro(
-        mlist_abs,
-        {
-            "type": "record",
-            "name": "manifest_file",
-            "fields": [
-                {"name": "manifest_path", "type": "string"},
-                {"name": "manifest_length", "type": "long"},
-                {"name": "partition_spec_id", "type": "int"},
-                {
-                    "name": "added_snapshot_id",
-                    "type": ["null", "long"],
-                    "default": None,
-                },
-                {"name": "content", "type": "int"},
+            {
+                "type": "record",
+                "name": "manifest_entry",
+                "fields": [
+                    {"name": "status", "type": "int"},
+                    {"name": "snapshot_id", "type": ["null", "long"], "default": None},
+                    {
+                        "name": "data_file",
+                        "type": {
+                            "type": "record",
+                            "name": "data_file",
+                            "fields": [
+                                {"name": "content", "type": "int"},
+                                {"name": "file_path", "type": "string"},
+                                {"name": "file_format", "type": "string"},
+                                {"name": "record_count", "type": "long"},
+                                {"name": "file_size_in_bytes", "type": "long"},
+                            ],
+                        },
+                    },
+                ],
+            },
+            [
+                (
+                    1,
+                    md["current-snapshot-id"],
+                    {
+                        "content": 1,
+                        "file_path": os.path.join("data", "pos-delete-0.parquet"),
+                        "file_format": "PARQUET",
+                        "record_count": len(positions),
+                        "file_size_in_bytes": os.path.getsize(done),
+                    },
+                )
             ],
-        },
-        rows,
-    )
-    json.dump(md, open(md_path, "w"))
-    return out
+        )
+        rows = [
+            (
+                m["manifest_path"],
+                m["manifest_length"],
+                m["partition_spec_id"],
+                m["added_snapshot_id"],
+                0,
+            )
+            for m in _read_avro(mlist_abs)
+        ]
+        rows.append(
+            (
+                del_manifest,
+                os.path.getsize(del_manifest),
+                0,
+                md["current-snapshot-id"],
+                1,
+            )
+        )
+        _write_avro(
+            mlist_abs,
+            {
+                "type": "record",
+                "name": "manifest_file",
+                "fields": [
+                    {"name": "manifest_path", "type": "string"},
+                    {"name": "manifest_length", "type": "long"},
+                    {"name": "partition_spec_id", "type": "int"},
+                    {
+                        "name": "added_snapshot_id",
+                        "type": ["null", "long"],
+                        "default": None,
+                    },
+                    {"name": "content", "type": "int"},
+                ],
+            },
+            rows,
+        )
+        json.dump(md, open(md_path, "w"))
+
+    return ensure_fixture(sf_dir, "customer_posdel_iceberg", build)
 
 
 @query(
@@ -900,29 +887,24 @@ def _materialize_renamed_iceberg(spark: SparkSession, sf_dir: str) -> str:
     odd keys under the NEW name. The live table mixes files written
     under both names; only parquet field-id resolution reads them as one
     column. Idempotent per SF."""
-    import shutil
-
     from .iceberg import rename_column_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_renamed_iceberg")
-    done = os.path.join(out, "metadata", "v3.metadata.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    write_iceberg(spark, cust.filter(F.col("c_custkey") % 2 == 0), out)
-    rename_column_iceberg(out, "c_acctbal", "account_balance")
-    write_iceberg(
-        spark,
-        cust.filter(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-            "c_acctbal", "account_balance"
-        ),
-        out,
-        mode="append",
-    )
-    return out
+    def build(out: str) -> None:
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal", "c_mktsegment"
+        )
+        write_iceberg(spark, cust.filter(F.col("c_custkey") % 2 == 0), out)
+        rename_column_iceberg(out, "c_acctbal", "account_balance")
+        write_iceberg(
+            spark,
+            cust.filter(F.col("c_custkey") % 2 == 1).withColumnRenamed(
+                "c_acctbal", "account_balance"
+            ),
+            out,
+            mode="append",
+        )
+
+    return ensure_fixture(sf_dir, "customer_renamed_iceberg", build)
 
 
 @query(
@@ -982,12 +964,7 @@ def q_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest tree. Scale: O(1) metadata IO regardless of table size."""
     from .iceberg import rollback_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_rollback_iceberg")
-    done = os.path.join(out, "metadata", "v3.metadata.json")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         orders = table(spark, sf_dir, "orders")
         write_iceberg(spark, orders.filter(F.col("o_orderkey") % 3 != 0), out)
         write_iceberg(
@@ -997,6 +974,8 @@ def q_iceberg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
         rollback_iceberg(out, 1)
+
+    out = ensure_fixture(sf_dir, "orders_rollback_iceberg", build)
     return (
         read_iceberg(spark, out)
         .groupBy("o_orderstatus")
@@ -1013,131 +992,128 @@ def _materialize_eqdel_iceberg(spark: SparkSession, sf_dir: str) -> str:
     divisible by 11; the v1-written data files sit at data seq 0 < 1, so
     the delete applies to all of them. Idempotent per SF."""
     import json
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .iceberg import _read_avro, _write_avro
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_eqdel_iceberg")
-    done = os.path.join(out, "data", "eq-delete-0.parquet")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    write_iceberg(spark, cust, out)
-    victims = [
-        r.c_custkey
-        for r in cust.filter(F.col("c_custkey") % 11 == 0)
-        .select("c_custkey")
-        .collect()
-    ]
-    pq.write_table(
-        pa.table({"c_custkey": pa.array(sorted(victims), pa.int64())}), done
-    )
-    meta_dir = os.path.join(out, "metadata")
-    v = int(open(os.path.join(meta_dir, "version-hint.text")).read().strip())
-    md_path = os.path.join(meta_dir, f"v{v}.metadata.json")
-    md = json.load(open(md_path))
-    md["format-version"] = 2
-    snap_md = next(
-        s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
-    )
-    mlist = snap_md["manifest-list"]
-    mlist_abs = mlist if os.path.isabs(mlist) else os.path.join(out, mlist)
-    del_manifest = os.path.join(meta_dir, "eq-delete-m0.avro")
-    _write_avro(
-        del_manifest,
-        {
-            "type": "record",
-            "name": "manifest_entry",
-            "fields": [
-                {"name": "status", "type": "int"},
-                {"name": "snapshot_id", "type": ["null", "long"], "default": None},
-                {
-                    "name": "sequence_number",
-                    "type": ["null", "long"],
-                    "default": None,
-                },
-                {
-                    "name": "data_file",
-                    "type": {
-                        "type": "record",
-                        "name": "data_file",
-                        "fields": [
-                            {"name": "content", "type": "int"},
-                            {"name": "file_path", "type": "string"},
-                            {"name": "file_format", "type": "string"},
-                            {"name": "record_count", "type": "long"},
-                            {"name": "file_size_in_bytes", "type": "long"},
-                            {
-                                "name": "equality_ids",
-                                "type": {"type": "array", "items": "int"},
-                            },
-                        ],
-                    },
-                },
-            ],
-        },
-        [
-            (
-                1,
-                md["current-snapshot-id"],
-                1,  # delete data sequence number
-                {
-                    "content": 2,
-                    "file_path": os.path.join("data", "eq-delete-0.parquet"),
-                    "file_format": "PARQUET",
-                    "record_count": len(victims),
-                    "file_size_in_bytes": os.path.getsize(done),
-                    "equality_ids": [1],  # c_custkey
-                },
-            )
-        ],
-    )
-    rows = [
-        (
-            m["manifest_path"],
-            m["manifest_length"],
-            m["partition_spec_id"],
-            m["added_snapshot_id"],
-            0,
+    def build(out: str) -> None:
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal", "c_mktsegment"
         )
-        for m in _read_avro(mlist_abs)
-    ]
-    rows.append(
-        (
+        write_iceberg(spark, cust, out)
+        victims = [
+            r.c_custkey
+            for r in cust.filter(F.col("c_custkey") % 11 == 0)
+            .select("c_custkey")
+            .collect()
+        ]
+        done = os.path.join(out, "data", "eq-delete-0.parquet")
+        pq.write_table(
+            pa.table({"c_custkey": pa.array(sorted(victims), pa.int64())}), done
+        )
+        meta_dir = os.path.join(out, "metadata")
+        v = int(open(os.path.join(meta_dir, "version-hint.text")).read().strip())
+        md_path = os.path.join(meta_dir, f"v{v}.metadata.json")
+        md = json.load(open(md_path))
+        md["format-version"] = 2
+        snap_md = next(
+            s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
+        )
+        mlist = snap_md["manifest-list"]
+        mlist_abs = mlist if os.path.isabs(mlist) else os.path.join(out, mlist)
+        del_manifest = os.path.join(meta_dir, "eq-delete-m0.avro")
+        _write_avro(
             del_manifest,
-            os.path.getsize(del_manifest),
-            0,
-            md["current-snapshot-id"],
-            1,
-        )
-    )
-    _write_avro(
-        mlist_abs,
-        {
-            "type": "record",
-            "name": "manifest_file",
-            "fields": [
-                {"name": "manifest_path", "type": "string"},
-                {"name": "manifest_length", "type": "long"},
-                {"name": "partition_spec_id", "type": "int"},
-                {
-                    "name": "added_snapshot_id",
-                    "type": ["null", "long"],
-                    "default": None,
-                },
-                {"name": "content", "type": "int"},
+            {
+                "type": "record",
+                "name": "manifest_entry",
+                "fields": [
+                    {"name": "status", "type": "int"},
+                    {"name": "snapshot_id", "type": ["null", "long"], "default": None},
+                    {
+                        "name": "sequence_number",
+                        "type": ["null", "long"],
+                        "default": None,
+                    },
+                    {
+                        "name": "data_file",
+                        "type": {
+                            "type": "record",
+                            "name": "data_file",
+                            "fields": [
+                                {"name": "content", "type": "int"},
+                                {"name": "file_path", "type": "string"},
+                                {"name": "file_format", "type": "string"},
+                                {"name": "record_count", "type": "long"},
+                                {"name": "file_size_in_bytes", "type": "long"},
+                                {
+                                    "name": "equality_ids",
+                                    "type": {"type": "array", "items": "int"},
+                                },
+                            ],
+                        },
+                    },
+                ],
+            },
+            [
+                (
+                    1,
+                    md["current-snapshot-id"],
+                    1,  # delete data sequence number
+                    {
+                        "content": 2,
+                        "file_path": os.path.join("data", "eq-delete-0.parquet"),
+                        "file_format": "PARQUET",
+                        "record_count": len(victims),
+                        "file_size_in_bytes": os.path.getsize(done),
+                        "equality_ids": [1],  # c_custkey
+                    },
+                )
             ],
-        },
-        rows,
-    )
-    json.dump(md, open(md_path, "w"))
-    return out
+        )
+        rows = [
+            (
+                m["manifest_path"],
+                m["manifest_length"],
+                m["partition_spec_id"],
+                m["added_snapshot_id"],
+                0,
+            )
+            for m in _read_avro(mlist_abs)
+        ]
+        rows.append(
+            (
+                del_manifest,
+                os.path.getsize(del_manifest),
+                0,
+                md["current-snapshot-id"],
+                1,
+            )
+        )
+        _write_avro(
+            mlist_abs,
+            {
+                "type": "record",
+                "name": "manifest_file",
+                "fields": [
+                    {"name": "manifest_path", "type": "string"},
+                    {"name": "manifest_length", "type": "long"},
+                    {"name": "partition_spec_id", "type": "int"},
+                    {
+                        "name": "added_snapshot_id",
+                        "type": ["null", "long"],
+                        "default": None,
+                    },
+                    {"name": "content", "type": "int"},
+                ],
+            },
+            rows,
+        )
+        json.dump(md, open(md_path, "w"))
+
+    return ensure_fixture(sf_dir, "customer_eqdel_iceberg", build)
 
 
 @query(
@@ -1181,28 +1157,23 @@ def _materialize_orders_iceberg_evolved(
     """orders → Iceberg table whose TWO snapshots straddle a partition
     evolution: s1 partitioned by o_orderstatus, metadata-only re-spec
     to o_orderpriority, s2 appended under the new spec."""
-    import shutil
-
     from .iceberg import evolve_partition_spec
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_iceberg_evolved")
-    done = os.path.join(out, "metadata", "v3.metadata.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
-    )
-    third = F.col("o_orderkey") % 3 == 0
-    write_iceberg(
-        spark, orders.filter(~third), out, partition_by=("o_orderstatus",)
-    )
-    evolve_partition_spec(out, ("o_orderpriority",))
-    write_iceberg(
-        spark, orders.filter(third), out, mode="append",
-        partition_by=("o_orderpriority",),
-    )
-    return out
+    def build(out: str) -> None:
+        orders = table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
+        )
+        third = F.col("o_orderkey") % 3 == 0
+        write_iceberg(
+            spark, orders.filter(~third), out, partition_by=("o_orderstatus",)
+        )
+        evolve_partition_spec(out, ("o_orderpriority",))
+        write_iceberg(
+            spark, orders.filter(third), out, mode="append",
+            partition_by=("o_orderpriority",),
+        )
+
+    return ensure_fixture(sf_dir, "orders_iceberg_evolved", build)
 
 
 @query(
@@ -1293,14 +1264,9 @@ def q_iceberg_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutability. Branch/tag heads are GC roots for
     ``expire_snapshots``. This is write-audit-publish at 100 TB —
     every ref costs one metadata write, no data copies."""
-    import shutil
-
     from .iceberg import create_ref
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_iceberg_refs")
-    done = os.path.join(out, "metadata", "v5.metadata.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment", "c_acctbal"
         )
@@ -1316,6 +1282,8 @@ def q_iceberg_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
             branch="staging",
         )
+
+    out = ensure_fixture(sf_dir, "customer_iceberg_refs", build)
 
     def census(df: DataFrame, ref: str) -> DataFrame:
         return df.agg(
@@ -1355,19 +1323,16 @@ def q_iceberg_delete_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``rewrite_data_files`` later folds deletes into data. Scale: the
     100 TB Iceberg deletion story — bytes of delete metadata per
     touched file instead of rewriting each."""
-    import shutil
-
     from .iceberg import delete_where_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_iceberg_mor_delete")
-    done = os.path.join(out, "metadata", "v2.metadata.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment"
         )
         write_iceberg(spark, cust, out)
         delete_where_iceberg(spark, out, "c_acctbal < 0")
+
+    out = ensure_fixture(sf_dir, "customer_iceberg_mor_delete", build)
     return (
         read_iceberg(spark, out)
         .groupBy("c_mktsegment")
@@ -1404,14 +1369,9 @@ def q_iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing key inserted exactly once. Contrast ``q_delta_merge``'s
     COW join-and-rewrite MERGE — this is the write-amplification-free
     100 TB CDC path, folded later by ``rewrite_data_files``."""
-    import shutil
-
     from .iceberg import upsert_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_iceberg_upsert")
-    done = os.path.join(out, "metadata", "v2.metadata.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         cust = table(spark, sf_dir, "customer").select(
             "c_custkey", "c_acctbal", "c_mktsegment"
         )
@@ -1420,6 +1380,8 @@ def q_iceberg_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_iceberg(spark, seed, out)
         upsert_iceberg(spark, cust, out, on=["c_custkey"])
+
+    out = ensure_fixture(sf_dir, "customer_iceberg_upsert", build)
     return (
         read_iceberg(spark, out)
         .groupBy("c_mktsegment")
@@ -1454,14 +1416,9 @@ def q_iceberg_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly. This is the metadata query behind compaction targeting
     and skew diagnosis at 100 TB: cost is O(manifests), never O(data).
     """
-    import shutil
-
     from .iceberg import partitions_meta
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_iceberg_parts_meta")
-    done = os.path.join(out, "metadata", "v2.metadata.json")
-    if not os.path.exists(done):
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out: str) -> None:
         orders = table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
         )
@@ -1474,6 +1431,8 @@ def q_iceberg_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, orders.filter(third).repartition(1), out, mode="append",
             partition_by=("o_orderstatus",),
         )
+
+    out = ensure_fixture(sf_dir, "orders_iceberg_parts_meta", build)
     rows = [
         (
             r["partition"]["o_orderstatus"],
@@ -2220,7 +2179,6 @@ def _materialize_transforms_iceberg(spark: SparkSession, sf_dir: str) -> str:
     on disk. Idempotent per SF."""
     import datetime as dt
     import json
-    import shutil
     import uuid
 
     import pyarrow as pa
@@ -2228,146 +2186,143 @@ def _materialize_transforms_iceberg(spark: SparkSession, sf_dir: str) -> str:
 
     from .iceberg import _MANIFEST_LIST_SCHEMA, _manifest_schema, _write_avro
 
-    out = os.path.join(_fixture_dir(sf_dir), "orders_transforms_iceberg")
-    done = os.path.join(out, "metadata", "version-hint.text")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(os.path.join(out, "data"))
-    os.makedirs(os.path.join(out, "metadata"))
+    def build(out: str) -> None:
+        os.makedirs(os.path.join(out, "data"))
+        os.makedirs(os.path.join(out, "metadata"))
 
-    cols = [
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderdate",
-        "o_orderpriority",
-    ]
-    pdf = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") < F.lit(_TRANSFORMS_WINDOW_HI).cast("timestamp_ntz"))
-        .select(*cols)
-        .orderBy("o_orderkey")
-        .toPandas()
-    )
-    epoch = dt.date(1970, 1, 1)
-    groups: dict[tuple, list[int]] = {}
-    for i, row in pdf.iterrows():
-        key = (
-            (row["o_orderdate"].date() - epoch).days,
-            _ice_bucket_long(int(row["o_custkey"]), 4),
-            str(row["o_orderpriority"])[:2],
-        )
-        groups.setdefault(key, []).append(i)
-
-    entries = []
-    for (day_v, bucket_v, trunc_v), idxs in sorted(groups.items()):
-        sub = pdf.loc[idxs]
-        rel = os.path.join(
-            "data", f"d{day_v}-b{bucket_v}-t{trunc_v.rstrip('-')}.parquet"
-        )
-        ap = os.path.join(out, rel)
-        tbl = pa.Table.from_pandas(sub, preserve_index=False)
-        # pandas hands back ns precision; Spark's vectorized reader
-        # needs MICROS for a timestamp_ntz column
-        i_ts = tbl.schema.get_field_index("o_orderdate")
-        tbl = tbl.set_column(
-            i_ts,
+        cols = [
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
             "o_orderdate",
-            tbl.column("o_orderdate").cast(pa.timestamp("us")),
+            "o_orderpriority",
+        ]
+        pdf = (
+            table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderdate") < F.lit(_TRANSFORMS_WINDOW_HI).cast("timestamp_ntz"))
+            .select(*cols)
+            .orderBy("o_orderkey")
+            .toPandas()
         )
-        pq.write_table(tbl, ap)
-        entries.append(
-            (
-                1,  # ADDED
-                1,
-                {
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        "od_day": str(day_v),
-                        "ck_bucket": str(bucket_v),
-                        "pr_trunc": trunc_v,
-                    },
-                    "record_count": len(idxs),
-                    "file_size_in_bytes": os.path.getsize(ap),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
+        epoch = dt.date(1970, 1, 1)
+        groups: dict[tuple, list[int]] = {}
+        for i, row in pdf.iterrows():
+            key = (
+                (row["o_orderdate"].date() - epoch).days,
+                _ice_bucket_long(int(row["o_custkey"]), 4),
+                str(row["o_orderpriority"])[:2],
             )
+            groups.setdefault(key, []).append(i)
+
+        entries = []
+        for (day_v, bucket_v, trunc_v), idxs in sorted(groups.items()):
+            sub = pdf.loc[idxs]
+            rel = os.path.join(
+                "data", f"d{day_v}-b{bucket_v}-t{trunc_v.rstrip('-')}.parquet"
+            )
+            ap = os.path.join(out, rel)
+            tbl = pa.Table.from_pandas(sub, preserve_index=False)
+            # pandas hands back ns precision; Spark's vectorized reader
+            # needs MICROS for a timestamp_ntz column
+            i_ts = tbl.schema.get_field_index("o_orderdate")
+            tbl = tbl.set_column(
+                i_ts,
+                "o_orderdate",
+                tbl.column("o_orderdate").cast(pa.timestamp("us")),
+            )
+            pq.write_table(tbl, ap)
+            entries.append(
+                (
+                    1,  # ADDED
+                    1,
+                    {
+                        "file_path": rel,
+                        "file_format": "PARQUET",
+                        "partition": {
+                            "od_day": str(day_v),
+                            "ck_bucket": str(bucket_v),
+                            "pr_trunc": trunc_v,
+                        },
+                        "record_count": len(idxs),
+                        "file_size_in_bytes": os.path.getsize(ap),
+                        "lower_bounds": None,
+                        "upper_bounds": None,
+                    },
+                )
+            )
+
+        man_rel = os.path.join("metadata", f"{uuid.uuid4().hex}-m0.avro")
+        _write_avro(
+            os.path.join(out, man_rel),
+            _manifest_schema(("od_day", "ck_bucket", "pr_trunc")),
+            entries,
+        )
+        mlist_rel = os.path.join("metadata", f"snap-1-1-{uuid.uuid4().hex}.avro")
+        _write_avro(
+            os.path.join(out, mlist_rel),
+            _MANIFEST_LIST_SCHEMA,
+            [(man_rel, os.path.getsize(os.path.join(out, man_rel)), 0, 1, 0, None)],
         )
 
-    man_rel = os.path.join("metadata", f"{uuid.uuid4().hex}-m0.avro")
-    _write_avro(
-        os.path.join(out, man_rel),
-        _manifest_schema(("od_day", "ck_bucket", "pr_trunc")),
-        entries,
-    )
-    mlist_rel = os.path.join("metadata", f"snap-1-1-{uuid.uuid4().hex}.avro")
-    _write_avro(
-        os.path.join(out, mlist_rel),
-        _MANIFEST_LIST_SCHEMA,
-        [(man_rel, os.path.getsize(os.path.join(out, man_rel)), 0, 1, 0, None)],
-    )
-
-    fields = [
-        {"id": i + 1, "name": c, "required": False, "type": t}
-        for i, (c, t) in enumerate(
-            [
-                ("o_orderkey", "long"),
-                ("o_custkey", "long"),
-                ("o_orderstatus", "string"),
-                ("o_totalprice", "double"),
-                ("o_orderdate", "timestamp"),
-                ("o_orderpriority", "string"),
-            ]
-        )
-    ]
-    spec_fields = [
-        {"name": "od_day", "transform": "day", "source-id": 5, "field-id": 1000},
-        {
-            "name": "ck_bucket",
-            "transform": "bucket[4]",
-            "source-id": 2,
-            "field-id": 1001,
-        },
-        {
-            "name": "pr_trunc",
-            "transform": "truncate[2]",
-            "source-id": 6,
-            "field-id": 1002,
-        },
-    ]
-    schema = {"type": "struct", "schema-id": 0, "fields": fields}
-    md = {
-        "format-version": 1,
-        "table-uuid": uuid.uuid4().hex,
-        "location": os.path.abspath(out),
-        "schema": schema,
-        "schemas": [schema],
-        "partition-spec": spec_fields,
-        "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-        "default-spec-id": 0,
-        "current-snapshot-id": 1,
-        "snapshots": [
+        fields = [
+            {"id": i + 1, "name": c, "required": False, "type": t}
+            for i, (c, t) in enumerate(
+                [
+                    ("o_orderkey", "long"),
+                    ("o_custkey", "long"),
+                    ("o_orderstatus", "string"),
+                    ("o_totalprice", "double"),
+                    ("o_orderdate", "timestamp"),
+                    ("o_orderpriority", "string"),
+                ]
+            )
+        ]
+        spec_fields = [
+            {"name": "od_day", "transform": "day", "source-id": 5, "field-id": 1000},
             {
-                "snapshot-id": 1,
-                "timestamp-ms": 1,
-                "manifest-list": mlist_rel,
-                "summary": {"operation": "append"},
-                "schema-id": 0,
-                "spec-id": 0,
-            }
-        ],
-        "properties": {},
-        "refs": {},
-    }
-    with open(os.path.join(out, "metadata", "v1.metadata.json"), "w") as fh:
-        json.dump(md, fh)
-    with open(done, "w") as fh:
-        fh.write("1")
-    return out
+                "name": "ck_bucket",
+                "transform": "bucket[4]",
+                "source-id": 2,
+                "field-id": 1001,
+            },
+            {
+                "name": "pr_trunc",
+                "transform": "truncate[2]",
+                "source-id": 6,
+                "field-id": 1002,
+            },
+        ]
+        schema = {"type": "struct", "schema-id": 0, "fields": fields}
+        md = {
+            "format-version": 1,
+            "table-uuid": uuid.uuid4().hex,
+            "location": os.path.abspath(out),
+            "schema": schema,
+            "schemas": [schema],
+            "partition-spec": spec_fields,
+            "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+            "default-spec-id": 0,
+            "current-snapshot-id": 1,
+            "snapshots": [
+                {
+                    "snapshot-id": 1,
+                    "timestamp-ms": 1,
+                    "manifest-list": mlist_rel,
+                    "summary": {"operation": "append"},
+                    "schema-id": 0,
+                    "spec-id": 0,
+                }
+            ],
+            "properties": {},
+            "refs": {},
+        }
+        with open(os.path.join(out, "metadata", "v1.metadata.json"), "w") as fh:
+            json.dump(md, fh)
+        with open(os.path.join(out, "metadata", "version-hint.text"), "w") as fh:
+            fh.write("1")
+
+    return ensure_fixture(sf_dir, "orders_transforms_iceberg", build)
 
 
 @query(
@@ -2428,29 +2383,22 @@ def _materialize_del_stream_iceberg(spark: SparkSession, sf_dir: str) -> str:
     ``c_acctbal < 0`` via a MOR position-delete snapshot (operation
     "delete", upgrades to v2), s3 appends the odd keys. Idempotent per
     SF."""
-    import shutil
-
     from .iceberg import delete_where_iceberg
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer_del_stream_iceberg")
-    # v3 is the LAST metadata the three operations write (append,
-    # delete, append) — checking v4 defeated the cache (ADVICE r14).
-    done = os.path.join(out, "metadata", "v3.metadata.json")
-    if os.path.exists(done):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    cust = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal", "c_mktsegment"
-    )
-    write_iceberg(spark, cust.filter(F.col("c_custkey") % 2 == 0).coalesce(1), out)
-    delete_where_iceberg(spark, out, "c_acctbal < 0")
-    write_iceberg(
-        spark,
-        cust.filter(F.col("c_custkey") % 2 == 1).coalesce(1),
-        out,
-        mode="append",
-    )
-    return out
+    def build(out: str) -> None:
+        cust = table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal", "c_mktsegment"
+        )
+        write_iceberg(spark, cust.filter(F.col("c_custkey") % 2 == 0).coalesce(1), out)
+        delete_where_iceberg(spark, out, "c_acctbal < 0")
+        write_iceberg(
+            spark,
+            cust.filter(F.col("c_custkey") % 2 == 1).coalesce(1),
+            out,
+            mode="append",
+        )
+
+    return ensure_fixture(sf_dir, "customer_del_stream_iceberg", build)
 
 
 @query(

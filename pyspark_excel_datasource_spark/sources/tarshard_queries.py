@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from .excel_queries import _fixture_dir
+from .excel_queries import _fixture_dir, ensure_fixture
 from .tarshard import register_tarshard
 
 _N_SHARDS = 4
@@ -27,10 +27,9 @@ def _materialize_doc_shards(sf_dir: str) -> str:
     """documents → ``_N_SHARDS`` tar shards, WebDataset layout: sample
     key = zero-padded doc_id, members ``<key>.txt`` (utf-8 text) and
     ``<key>.cls`` (lang label). Deterministic (sorted keys, mtime=0)."""
-    out_dir = os.path.join(_fixture_dir(sf_dir), "doc_shards")
-    done = os.path.join(out_dir, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out_dir, exist_ok=True)
+
+    def build(out_dir: str) -> None:
+        os.makedirs(out_dir)
         tbl = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "text", "lang"],
@@ -59,8 +58,8 @@ def _materialize_doc_shards(sf_dir: str) -> str:
         finally:
             for tf in tars:
                 tf.close()
-        open(done, "w").close()
-    return out_dir
+
+    return ensure_fixture(sf_dir, "doc_shards", build)
 
 
 @query(
@@ -207,10 +206,9 @@ def _materialize_image_shards(sf_dir: str) -> str:
     import struct
     import zlib
 
-    out_dir = os.path.join(_fixture_dir(sf_dir), "img_shards")
-    done = os.path.join(out_dir, "_done")
-    if not os.path.exists(done):
-        os.makedirs(out_dir, exist_ok=True)
+
+    def build(out_dir: str) -> None:
+        os.makedirs(out_dir)
         ids = sorted(
             i
             for i in pq.read_table(
@@ -242,8 +240,8 @@ def _materialize_image_shards(sf_dir: str) -> str:
         finally:
             for tf in tars:
                 tf.close()
-        open(done, "w").close()
-    return out_dir
+
+    return ensure_fixture(sf_dir, "img_shards", build)
 
 
 @query(

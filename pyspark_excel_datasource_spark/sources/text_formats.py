@@ -26,36 +26,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from .excel_queries import _fixture_dir
+from .excel_queries import _fixture_dir, ensure_fixture
 
 
 def _materialize_supplier_csv(sf_dir: str) -> str:
     """supplier.parquet → supplier.csv (header row, shortest-repr
-    floats), idempotent."""
-    out = os.path.join(_fixture_dir(sf_dir), "supplier.csv")
-    if not os.path.exists(out):
-        frame = pq.read_table(
+    floats)."""
+    return ensure_fixture(
+        sf_dir,
+        "supplier.csv",
+        lambda out: pq.read_table(
             os.path.join(sf_dir, "supplier.parquet"),
             columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-        ).to_pandas()
-        frame.to_csv(out + ".tmp", index=False)
-        os.replace(out + ".tmp", out)
-    return out
+        ).to_pandas().to_csv(out, index=False),
+    )
 
 
 def _materialize_part_jsonl(sf_dir: str) -> str:
-    """part.parquet → part.jsonl (one JSON object per line), idempotent."""
-    out = os.path.join(_fixture_dir(sf_dir), "part.jsonl")
-    if not os.path.exists(out):
-        frame = pq.read_table(
+    """part.parquet → part.jsonl (one JSON object per line)."""
+    return ensure_fixture(
+        sf_dir,
+        "part.jsonl",
+        lambda out: pq.read_table(
             os.path.join(sf_dir, "part.parquet"),
             columns=["p_partkey", "p_name", "p_brand", "p_size", "p_retailprice"],
-        ).to_pandas()
-        frame.to_json(
-            out + ".tmp", orient="records", lines=True, double_precision=15
-        )
-        os.replace(out + ".tmp", out)
-    return out
+        ).to_pandas().to_json(out, orient="records", lines=True, double_precision=15),
+    )
 
 
 @query(
@@ -153,19 +149,18 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialize_docs_txt(sf_dir: str) -> str:
     """documents.parquet → docs.txt (one ``doc_id<TAB>text`` line per
-    document; the corpus text contains neither tabs nor newlines),
-    idempotent."""
-    out = os.path.join(_fixture_dir(sf_dir), "docs.txt")
-    if not os.path.exists(out):
+    document; the corpus text contains neither tabs nor newlines)."""
+
+    def build(out: str) -> None:
         frame = pq.read_table(
             os.path.join(sf_dir, "documents.parquet"),
             columns=["doc_id", "text"],
         ).to_pandas()
-        with open(out + ".tmp", "w", encoding="utf-8") as fh:
+        with open(out, "w", encoding="utf-8") as fh:
             for doc_id, text in zip(frame["doc_id"], frame["text"]):
                 fh.write(f"{doc_id}\t{text}\n")
-        os.replace(out + ".tmp", out)
-    return out
+
+    return ensure_fixture(sf_dir, "docs.txt", build)
 
 
 @query(
@@ -243,19 +238,18 @@ def q_sink_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _materialize_customer_xml(sf_dir: str) -> str:
-    """customer.parquet → customer.xml (one <row> element per record),
-    idempotent. Values are written with Python's shortest-repr str() so
+    """customer.parquet → customer.xml (one <row> element per record).
+    Values are written with Python's shortest-repr str() so
     doubles survive the text roundtrip bit-exactly (same rationale as
     the CSV/JSONL bridges)."""
     from xml.sax.saxutils import escape
 
-    out = os.path.join(_fixture_dir(sf_dir), "customer.xml")
-    if not os.path.exists(out):
+    def build(out: str) -> None:
         cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
         rows = pq.read_table(
             os.path.join(sf_dir, "customer.parquet"), columns=cols
         ).to_pylist()
-        with open(out + ".tmp", "w", encoding="utf-8") as fh:
+        with open(out, "w", encoding="utf-8") as fh:
             fh.write("<customers>\n")
             for r in rows:
                 fh.write("  <row>")
@@ -263,8 +257,8 @@ def _materialize_customer_xml(sf_dir: str) -> str:
                     fh.write(f"<{c}>{escape(str(r[c]))}</{c}>")
                 fh.write("</row>\n")
             fh.write("</customers>\n")
-        os.replace(out + ".tmp", out)
-    return out
+
+    return ensure_fixture(sf_dir, "customer.xml", build)
 
 
 @query(

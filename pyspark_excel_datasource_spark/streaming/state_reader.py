@@ -15,47 +15,45 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..sources.excel_queries import _fixture_dir
+from ..sources.excel_queries import ensure_fixture
 
 
 def _state_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Run (once per SF) a keyed streaming aggregation over the events
-    table with a checkpoint, and return the checkpoint path. Idempotent:
-    a committed batch 0 marks the fixture done, so warm runs read state
-    without re-running the stream."""
-    root = os.path.join(_fixture_dir(sf_dir), "state_reader")
-    ck = os.path.join(root, "ckpt")
-    src_dir = os.path.join(root, "src")
-    if os.path.exists(os.path.join(ck, "commits", "0")):
-        return ck
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(src_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(src_dir, "events.parquet"),
-    )
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .format("parquet")
-        .load(src_dir)
-    )
-    agg = stream.groupBy("user_id").agg(
-        F.count("*").alias("n"),
-        F.sum(F.expr("CAST(ROUND(value * 100) AS LONG)")).alias("cents"),
-    )
-    q = (
-        agg.writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError("state_reader fixture drain did not finish")
-    finally:
-        q.stop()
-    return ck
+    table with a checkpoint, and return the checkpoint path. Built once
+    (ensure_fixture), so warm runs read state without re-running the
+    stream."""
+
+    def build(root: str) -> None:
+        src_dir = os.path.join(root, "src")
+        os.makedirs(src_dir)
+        shutil.copy(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(src_dir, "events.parquet"),
+        )
+        stream = (
+            spark.readStream.schema("user_id long, value double")
+            .format("parquet")
+            .load(src_dir)
+        )
+        agg = stream.groupBy("user_id").agg(
+            F.count("*").alias("n"),
+            F.sum(F.expr("CAST(ROUND(value * 100) AS LONG)")).alias("cents"),
+        )
+        q = (
+            agg.writeStream.format("noop")
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not q.awaitTermination(120):
+                raise TimeoutError("state_reader fixture drain did not finish")
+        finally:
+            q.stop()
+
+    return os.path.join(ensure_fixture(sf_dir, "state_reader", build), "ckpt")
 
 
 @query(

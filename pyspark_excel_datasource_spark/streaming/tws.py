@@ -69,18 +69,17 @@ def _ship_protoshim(spark) -> None:
         )
     from ..sources import excel_queries
 
-    zip_path = os.path.join(excel_queries._FIXTURE_ROOT, "protoshim.zip")
-    if not os.path.exists(zip_path):
-        os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
+    def build(zip_path: str) -> None:
+        with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(_PROTOSHIM):
                 for f in files:
                     if f.endswith(".py"):
                         full = os.path.join(root, f)
                         zf.write(full, os.path.relpath(full, _PROTOSHIM))
-        os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+
+    spark.sparkContext.addPyFile(
+        excel_queries.ensure_fixture(None, "protoshim.zip", build)
+    )
 
 #: memory-sink view of the previous run (see stateful.py rationale)
 _LAST_SINK: str | None = None

@@ -193,3 +193,31 @@ def test_local_df_keeps_null_in_bigint_column(spark):
     df = local_df(spark, [(1, None, "x"), (None, big, None)], "a bigint, b bigint, c string")
     assert dict(df.dtypes) == {"a": "bigint", "b": "bigint", "c": "string"}
     assert [tuple(r) for r in df.collect()] == [(1, None, "x"), (None, big, None)]
+
+
+def test_session_memo_scopes_entries_by_application(monkeypatch):
+    """A process-scope entry survives an application change; a session
+    miss drops only other applications' entries, never its own."""
+    from types import SimpleNamespace
+
+    from pyspark_excel_datasource_spark import catalog
+
+    monkeypatch.setattr(catalog, "_MEMO", {})
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    a, b = app("app-a"), app("app-b")
+    builds = []
+
+    def build(value):
+        return lambda: builds.append(value) or value
+
+    assert catalog.session_memo("schema", "p", build("schema")) == "schema"
+    catalog.session_memo("df", 1, build("a1"), a)
+    catalog.session_memo("df", 2, build("a2"), a)
+    assert catalog.session_memo("df", 1, build("rebuilt"), a) == "a1"
+    assert catalog.session_memo("df", 1, build("b1"), b) == "b1"
+    assert set(catalog._MEMO) == {("schema", None, "p"), ("df", "app-b", 1)}
+    assert catalog.session_memo("schema", "p", build("rebuilt")) == "schema"
+    assert builds == ["schema", "a1", "a2", "b1"]

@@ -15,17 +15,14 @@ default suite as well (the invariance property is core, not optional).
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.plans.registry import (  # noqa: E402
+from pyspark_excel_datasource_spark.plans.registry import (
     ORACLES,
     load_all_queries,
 )
-from pyspark_excel_datasource_spark.testing import compare_query  # noqa: E402
+from pyspark_excel_datasource_spark.testing import compare_query
 
 pytestmark = pytest.mark.cluster_shape
 

@@ -15,15 +15,12 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.deltalog import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.deltalog import (
     DeltaProtocolError,
     delete_where,
     merge_delta,

@@ -12,14 +12,11 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.deltalog import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.deltalog import (
     DeltaConstraintViolationError,
     DeltaProtocolError,
     add_check_constraint,

@@ -14,14 +14,11 @@ from __future__ import annotations
 import json
 import os
 import struct
-import sys
 import zlib
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.dvbitmap import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.dvbitmap import (
     DV_MAGIC,
     deleted_row_indexes,
     dv_relative_path,
@@ -29,7 +26,7 @@ from pyspark_excel_datasource_spark.sources.dvbitmap import (  # noqa: E402
     z85_decode,
     z85_encode,
 )
-from pyspark_excel_datasource_spark.sources.deltalog import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.deltalog import (
     DeltaProtocolError,
     delete_where,
     merge_delta,

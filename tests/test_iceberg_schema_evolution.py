@@ -13,14 +13,11 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.iceberg import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.iceberg import (
     IcebergFormatError,
     read_iceberg,
     rename_column_iceberg,

@@ -13,16 +13,13 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.iceberg import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.iceberg import (
     IcebergFormatError,
     _read_avro,
     _write_avro,

@@ -9,21 +9,18 @@ versions stay time-travelable afterwards.
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark_excel_datasource_spark.sources.deltalog import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.deltalog import (
     read_delta,
     restore_table,
     snapshot,
     vacuum,
     write_delta,
 )
-from pyspark_excel_datasource_spark.sources.iceberg import (  # noqa: E402
+from pyspark_excel_datasource_spark.sources.iceberg import (
     read_iceberg,
     rollback_iceberg,
     snapshots,

@@ -23,10 +23,12 @@ No SparkSession needed — this is pure registry + JSON-record logic.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from gen_provenance import collect, stalest_window  # noqa: E402
 

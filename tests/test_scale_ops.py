@@ -202,19 +202,21 @@ def test_bloom_column_memo_keeps_alternating_word_arrays(spark):
     """Two bloom word-arrays used in turn both stay memoized, so neither
     rebuilds its ~0.6 s literal; a miss evicts only entries of another
     application."""
+    from pyspark_excel_datasource_spark import catalog
     from pyspark_excel_datasource_spark.operators import scale
 
     fact = spark.range(8).withColumnRenamed("id", "k")
     dim = spark.range(4).withColumnRenamed("id", "d")
     a = ([1] * scale._BLOOM_WORDS, 4)
     b = ([2] * scale._BLOOM_WORDS, 4)
-    memo = scale._BLOOM_COLUMN_MEMO
-    memo[("ended-app", (0,))] = object()
+    memo = catalog._MEMO
+    memo[("bloom_column", "ended-app", (0,))] = object()
     app = spark.sparkContext.applicationId
     for arr in (a, b):
         scale.bloom_semi_join(fact, dim, "k", "d", prebuilt=arr)
-    cols = [memo.get((app, tuple(arr[0]))) for arr in (a, b)]
-    assert all(c is not None for c in cols) and ("ended-app", (0,)) not in memo
+    cols = [memo.get(("bloom_column", app, tuple(arr[0]))) for arr in (a, b)]
+    assert all(c is not None for c in cols)
+    assert ("bloom_column", "ended-app", (0,)) not in memo
     for i, arr in enumerate((a, b, a, b)):
         scale.bloom_semi_join(fact, dim, "k", "d", prebuilt=arr)
-        assert memo.get((app, tuple(arr[0]))) is cols[i % 2]
+        assert memo.get(("bloom_column", app, tuple(arr[0]))) is cols[i % 2]

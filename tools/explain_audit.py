@@ -14,10 +14,11 @@ Usage: python tools/explain_audit.py [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark_excel_datasource_spark.plans.registry import load_all_queries
 from pyspark_excel_datasource_spark.session import get_session

@@ -12,11 +12,12 @@ Usage: python tools/find_decimal_outputs.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql.types import DataType, DecimalType
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark_excel_datasource_spark.plans.registry import load_all_queries
 from pyspark_excel_datasource_spark.session import get_session
